@@ -1857,12 +1857,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def train_curation(spark, sf):
         # The composed curation pipeline: scrub → length guard → exact
         # dedupe → split label, planned as ONE lazy DataFrame
-        # (plans/training.py:curate_corpus). md5 split seam so the oracle
+        # (plans/training.py:curate). md5 split seam so the oracle
         # mirrors membership exactly.
         docs = _t(spark, sf, "documents").select("doc_id", "text")
         from reddit_twitter_big_data_pipeline_spark.plans import training
 
-        return training.curate_corpus(docs, hash_fn="md5")
+        return training.curate(
+            docs, [training.scrub(), training.min_words(10)], hash_fn="md5"
+        )
 
     q["train_curation"] = train_curation
 
@@ -3279,7 +3281,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def train_curation_v2(spark, sf):
         # The RefinedWeb/Dolma end-to-end curation shape (VERDICT r8
-        # item 7; plans/training.py:curate_corpus_v2): confidence-gated
+        # item 7; plans/training.py:curate + web_gates): confidence-gated
         # langid → domain blocklist (broadcast anti-join, list as DATA)
         # → integer-micro-unit quality gate → per-domain quota (r10 /
         # ADVICE r9: quality BEFORE quota, so a low-quality page never
@@ -3300,8 +3302,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
         from reddit_twitter_big_data_pipeline_spark.plans import training
 
-        return training.curate_corpus_v2(
-            planted, blocked, min_margin=2, domain_cap=5, hash_fn="md5"
+        return training.curate(
+            planted, training.web_gates(blocked, min_margin=2), domain_cap=5,
+            hash_fn="md5",
         )
 
     q["train_curation_v2"] = train_curation_v2
@@ -3322,7 +3325,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def train_curation_increment(spark, sf):
         # Incremental batch admission against a standing curated corpus
-        # (plans/training.py:curate_increment) — the steady-state
+        # (plans/training.py:admit) — the steady-state
         # production shape: the corpus contributes ONLY its fingerprint
         # set and per-domain counts; batch rows pass the row-local gates,
         # dedupe within-batch and against the corpus, then consume each
@@ -3367,8 +3370,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
         from reddit_twitter_big_data_pipeline_spark.plans import training
 
-        return training.curate_increment(
-            batch, corpus, min_margin=2, domain_cap=15, hash_fn="md5"
+        return training.admit(
+            batch, corpus, training.web_gates(min_margin=2), domain_cap=15,
+            hash_fn="md5",
         )
 
     q["train_curation_increment"] = train_curation_increment
@@ -3515,8 +3519,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # --- r10: incremental admission with the near-dup corpus screen -------
 
     def train_curation_increment_v2(spark, sf):
-        # curate_increment composed with the incremental MinHash probe
-        # (plans/training.py:curate_increment_v2, r10 — VERDICT r9 item
+        # train_curation_increment with the incremental MinHash probe
+        # (plans/training.py:admit's near-dup screen, r10 — VERDICT r9 item
         # 7): a recrawl differing from a corpus page only by a token
         # survives the exact-fp anti-join but must not be admitted. The
         # planted batch keeps every v1 drop reason live (verbatim corpus
@@ -3568,8 +3572,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
         from reddit_twitter_big_data_pipeline_spark.plans import training
 
-        return training.curate_increment_v2(
-            batch, corpus, min_margin=2, domain_cap=15, hash_fn="md5"
+        return training.admit(
+            batch, corpus, training.web_gates(min_margin=2), domain_cap=15,
+            hash_fn="md5", neardup_threshold=0.9,
         )
 
     q["train_curation_increment_v2"] = train_curation_increment_v2
@@ -3627,8 +3632,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["train_pack_sequences"] = train_pack_sequences
 
     def train_curation_v3(spark, sf):
-        # curate_corpus_v2 + the REPETITION gate (plans/training.py:
-        # curate_corpus_v3, r10): shape-based quality passes SEO spam
+        # train_curation_v2 + the REPETITION gate (plans/training.py:
+        # repetition, r10): shape-based quality passes SEO spam
         # that repeats itself; the gate cuts on floor(frac·1e6) integer
         # micro-units of dup-line fraction and top-bigram char coverage
         # (repetition_signals). doc_id%9==7 rows append ' click here'
@@ -3651,8 +3656,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
         from reddit_twitter_big_data_pipeline_spark.plans import training
 
-        return training.curate_corpus_v3(
-            planted, blocked, min_margin=2, domain_cap=5, hash_fn="md5"
+        return training.curate(
+            planted,
+            [*training.web_gates(blocked, min_margin=2), training.repetition()],
+            domain_cap=5,
+            hash_fn="md5",
         )
 
     q["train_curation_v3"] = train_curation_v3
@@ -7170,7 +7178,7 @@ def oracle_sql() -> dict[str, str]:
     # the integer micro-unit quality cut (text_domain_stats' floor
     # discipline as a FILTER — no float tie boundary), min-id dedupe and
     # split cutoffs (train_curation). Stage order mirrors
-    # curate_corpus_v2 exactly (ADVICE r9: quality BEFORE quota, so a
+    # training.curate + web_gates exactly (ADVICE r9: quality BEFORE quota, so a
     # low-quality page never consumes a domain's cap).
     o["train_curation_v2"] = f"""
         WITH {_LANGID_SCORED_CTE},

@@ -321,7 +321,7 @@ def main() -> None:
         # stages (~60 s at 16x) ran untimed. Old numbers kept:
         # BENCH_r13.json scaled.train_curation_v2_16x = 10.169 (driver,
         # post-barrier half only); r14 baseline under the same broken
-        # timer = 7.8 s, full-cost = see BENCH_r14_opt_baseline.json.
+        # timer = 7.8 s.
         _scaled_builders = {
             "train_curation_v2_16x": _bcs.build_v2,
             "train_curation_increment_16x": _bcs.build_increment,

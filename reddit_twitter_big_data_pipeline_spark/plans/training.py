@@ -1,10 +1,19 @@
 """The composed training-data curation pipeline — the end-to-end plan a
-corpus runs before tokenization: scrub → length-guard → exact-dedupe →
-split assignment, each stage an operator this engine already oracle-gates
-individually, composed here into ONE lazy DataFrame so Catalyst plans the
-whole pipeline together (the scrub projection fuses into the scan, the
-guard pushes under the dedup window's exchange, and nothing materializes
-between stages).
+corpus runs before tokenization, built by ONE staged builder:
+
+1. an ordered list of row GATES (`scrub`, `min_words`, `web_gates`,
+   `repetition`), each a row-local stage that filters rows or adds a
+   label column;
+2. a tail: `curate` (whole corpus) — per-domain quota, exact dedupe,
+   split label — or `admit` (a new batch against a standing corpus) —
+   within-batch dedupe, corpus-fingerprint anti-join, optional near-dup
+   screen, remaining-quota ranking.
+
+The registered `train_curation*` queries and `streaming/curation.py`'s
+pipelines are configurations of these pieces, so the langid → blocklist
+→ quality chain, the output tails and the barrier placement each have
+one definition. Everything stays ONE lazy DataFrame so Catalyst plans
+the whole pipeline together; the only cuts are the `_gate_barrier`s.
 
 This is the composition story the reference's per-job Glue scripts lack
 (each stage there is a separate job landing to S3 — reference:
@@ -15,6 +24,9 @@ one fingerprint-keyed dedup exchange.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from typing import NamedTuple
+
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
@@ -22,570 +34,367 @@ from ..operators import dedup as dedup_ops, sampling, text as text_ops
 from ..parallel import spread as _spread
 
 
-def _gate_barrier(df: DataFrame, enabled: bool = True) -> DataFrame:
-    """Lazy localCheckpoint BETWEEN a scored projection and the filters
-    that consume it (r14). Catalyst pushes a filter through a projection
-    by SUBSTITUTING the projected expressions into the condition, so
-    `langid_margin(...).filter(lang_conf != 'und')` re-evaluates the
-    whole staged token machinery inside the filter — the executed gate
-    plan carried ~114 copies of split(regexp_replace(lower(text))) and
-    the chain ran core-count-flat at ~6.5 s per action (measured r14;
-    spreading to 64 partitions did not move it). The barrier makes the
-    filters read materialized attributes: one copy of the machinery,
-    one pass over the text. No-op on streaming frames (plan-build-time
-    AnalysisException otherwise; micro-batch plans are rebuilt per
-    batch anyway) and when `enabled` is False (the checkpoint_gated
-    escape hatch — executor churn loses unreplicated localCheckpoint
-    blocks, see curate_corpus_v2)."""
-    if not enabled or df.isStreaming:
-        return df
-    return df.localCheckpoint(eager=False)
+class _Cols(NamedTuple):
+    """The column names every curation stage reads."""
+
+    id: str
+    text: str
+    url: str
 
 
-def curate_corpus(
+# A gate maps the rows (every input column passes through) to the rows it
+# keeps, optionally adding label columns; `_Cols` names the columns it reads.
+Gate = Callable[[DataFrame, _Cols], DataFrame]
+
+# label columns `web_gates` adds; the tails carry them into their output
+_LABELS = ("lang", "domain")
+
+
+def _gate_barrier(df: DataFrame) -> DataFrame:
+    """The curation stack's one barrier rule: a lazy localCheckpoint right
+    after each gate that evaluates the staged token machinery — the
+    scrub projection, the scored langid projection and the quality
+    filter — and once more over admission's novel rows, which feed
+    several consumers.
+
+    Why: Catalyst pushes a filter through a projection by SUBSTITUTING
+    the projected expressions into the condition, and every extra
+    reference of a subtree (an anti-join side, a window, a quota join)
+    repeats it, so without the cut the text scoring re-runs per
+    reference. The barrier makes downstream stages read materialized
+    attributes: one copy of the machinery, one pass over the text
+    (BASELINE.md r10: the v3 barrier measured 0.56× of the barrier-less
+    plan, rows identical). The `repetition` gate has none: its fold is
+    still substituted into its filter. `tests/test_plans.py` pins each
+    curation query's barrier count and plan shape.
+
+    Fault-tolerance trade-off: localCheckpoint keeps UNREPLICATED
+    executor-local blocks and cuts the lineage that would rebuild them,
+    so losing an executor that holds one (spot reclaim, dynamic-
+    allocation scale-down, OOM kill) fails the job instead of
+    recomputing; the blocks also take executor disk. Deployments with
+    executor churn should swap this for a reliable `df.checkpoint()` to
+    cluster storage — here, in one place.
+
+    No-op on streaming frames: micro-batch plans are rebuilt per batch,
+    and a checkpoint there is a plan-build-time AnalysisException."""
+    return df if df.isStreaming else df.localCheckpoint(eager=False)
+
+
+def _gated(df: DataFrame, gates: list[Gate], c: _Cols) -> DataFrame:
+    for gate in gates:
+        df = gate(df, c)
+    return df
+
+
+def _keep_but(df: DataFrame, c: _Cols) -> tuple[str, ...]:
+    """Every column but the id — what a scoring operator's `keep` passes
+    through so a gate can filter on its score without re-joining by id."""
+    return tuple(x for x in df.columns if x != c.id)
+
+
+def scrub() -> Gate:
+    """Markup/control/PII scrub of the text, in place
+    (``clean_for_training``, one projection). Put it first: later gates
+    and the dedupe then see cleaned text, so two docs differing only in
+    boilerplate are duplicates."""
+
+    def gate(df: DataFrame, c: _Cols) -> DataFrame:
+        return _gate_barrier(text_ops.clean_for_training(df, col=c.text))
+
+    return gate
+
+
+def min_words(n: int) -> Gate:
+    """Length guard: at least `n` whitespace tokens (after `scrub`, since
+    scrubbing can empty a doc)."""
+
+    def gate(df: DataFrame, c: _Cols) -> DataFrame:
+        return df.filter(text_ops.token_count(c.text) >= n)
+
+    return gate
+
+
+def web_gates(
+    blocked: DataFrame | None = None,
+    min_margin: int = 2,
+    q_micro_min: int = 150_000,
+    blocked_col: str = "domain",
+) -> list[Gate]:
+    """The web-document gate chain (RefinedWeb/Dolma order), the one
+    definition shared by whole-corpus curation, batch admission and both
+    streaming pipelines:
+
+    1. confidence-gated language ID (``langid_margin``; the label rides
+       the scan, no re-join): rows whose lang_conf is 'und' drop, the
+       rest gain `lang`;
+    2. `domain` = registered domain of the url, then an optional
+       registered-domain BLOCKLIST as a broadcast left-anti join (the
+       list is DATA: `blocked`'s `blocked_col`; the corpus never
+       shuffles);
+    3. QUALITY on exact integer micro-units:
+       floor(quality_score·1e6) >= q_micro_min — floor is binary-exact
+       in both engines, so the gate has NO float tie boundary.
+
+    Cheap row-local gates run before any quota, so a low-quality page can
+    never consume a domain's cap."""
+
+    def langid(df: DataFrame, c: _Cols) -> DataFrame:
+        scored = _gate_barrier(
+            text_ops.langid_margin(
+                df, col=c.text, id_col=c.id, min_margin=min_margin,
+                keep=_keep_but(df, c),
+            )
+        )
+        return scored.filter(F.col("lang_conf") != "und").select(
+            *df.columns, F.col("lang_conf").alias("lang")
+        )
+
+    def domain(df: DataFrame, c: _Cols) -> DataFrame:
+        dom = df.withColumn("domain", text_ops.registered_domain(c.url))
+        if blocked is None:
+            return dom
+        return dom.join(
+            F.broadcast(blocked.select(F.col(blocked_col).alias("domain"))),
+            "domain",
+            "left_anti",
+        )
+
+    def quality(df: DataFrame, c: _Cols) -> DataFrame:
+        return _gate_barrier(
+            df.filter(
+                F.floor(text_ops.quality_score(c.text) * F.lit(1_000_000.0)).cast("long")
+                >= F.lit(q_micro_min)
+            )
+        )
+
+    return [langid, domain, quality]
+
+
+def repetition(
+    dup_line_micro_max: int = 300_000, top_bigram_micro_max: int = 200_000
+) -> Gate:
+    """Gopher/MassiveText REPETITION gate: shape-based quality passes SEO
+    spam that repeats itself; `repetition_signals` catches it. Cuts the
+    dup-line fraction and the top-bigram char coverage on floor(frac·1e6)
+    integer micro-units (binary-exact in both engines). The fold-form
+    signals are a row-local projection, so the gate filters on
+    passthrough columns — no signal-frame id-join."""
+
+    def gate(df: DataFrame, c: _Cols) -> DataFrame:
+        def micro(col: str):
+            return F.floor(F.col(col) * F.lit(1_000_000.0)).cast("long")
+
+        return (
+            text_ops.repetition_signals(
+                df, col=c.text, id_col=c.id, keep=_keep_but(df, c)
+            )
+            .filter(
+                (micro("dup_line_frac") <= F.lit(dup_line_micro_max))
+                & (micro("top_bigram_char_frac") <= F.lit(top_bigram_micro_max))
+            )
+            .select(*df.columns)
+        )
+
+    return gate
+
+
+def curate(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_words: int = 10,
+    gates: list[Gate],
+    domain_cap: int | None = None,
     split_weights: tuple[float, float, float] = (0.98, 0.01, 0.01),
     hash_fn: str = "xxhash64",
-    checkpoint_gated: bool = True,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    url_col: str = "url",
 ) -> DataFrame:
-    """(id, split, n_tokens) for every SURVIVING document:
+    """Whole-corpus curation: `gates` in order, then
 
-    1. ``clean_for_training`` — markup/control/PII scrub (one projection);
-    2. length guard on the CLEANED text (scrubbing can empty a doc);
-    3. ``exact_dedupe`` on the cleaned text (min-id keeps, documents never
-       ride the fingerprint exchange);
-    4. deterministic split label (hash membership — reproducible on any
+    1. per-domain QUOTA when `domain_cap` is set (``cap_per_group`` —
+       deterministic hash order, one domain-keyed window; needs the
+       `domain` column of `web_gates`);
+    2. exact DEDUPE on the (cleaned) text (min-id keeps, the documents
+       never ride the fingerprint exchange);
+    3. deterministic SPLIT label (hash membership — reproducible on any
        partitioning, any engine via hash_fn='md5').
 
-    Order matters and is the curation-standard one: dedup AFTER cleaning
-    (two docs differing only in boilerplate are duplicates), split LAST
-    (so losers don't consume split capacity).
+    Returns (id, [lang, domain,] split, n_tokens) for surviving docs;
+    `lang`/`domain` appear when the gates add them. Every `docs` column
+    rides through the gates (and into their barriers), so select what
+    the gates need first.
 
-    ``checkpoint_gated`` (r14): a `_gate_barrier` after the scrub
-    projection — without it the length guard's filter pushdown
-    substitutes the whole scrub regex chain into its condition and
-    ``exact_dedupe``'s loser anti-join doubles everything again (the
-    same duplication `_gate_barrier` documents for the v2 gates), so
-    the scrub ran up to 4× per row. Same values; False for executor-
-    churn/disk-constrained deployments (see curate_corpus_v2)."""
-    cleaned = _gate_barrier(
-        text_ops.clean_for_training(docs.select(id_col, text_col), col=text_col),
-        checkpoint_gated,
-    )
-    guarded = cleaned.filter(text_ops.token_count(text_col) >= min_words)
-    deduped = dedup_ops.exact_dedupe(guarded, id_col=id_col, text_col=text_col)
+    Stage order is the curation-standard one: the per-domain rule before
+    dedupe (a domain's quota should not be refilled by its own
+    near-identical pages), split LAST so losers don't consume split
+    capacity. Scale shape: the gates are scan-level projections plus a
+    broadcast blocklist; the quota window is the one domain-keyed corpus
+    exchange (text rides as payload, never a key — pair with AQE skew
+    split for celebrity domains); the dedupe windows a slim (id, fp)
+    projection. The input is `spread()` first: a few-MB corpus arrives as
+    1-2 scan splits, and the gate chain is row-local CPU work; at scale
+    spread is a no-op costing only the partition-count check."""
+    kept = _gated(_spread(docs), gates, _Cols(id_col, text_col, url_col))
+    if domain_cap is not None:
+        kept = sampling.cap_per_group(
+            kept, "domain", domain_cap, id_col=id_col, hash_fn=hash_fn
+        )
+    deduped = dedup_ops.exact_dedupe(kept, id_col=id_col, text_col=text_col)
     return deduped.select(
         F.col(id_col),
+        *[x for x in _LABELS if x in deduped.columns],
         sampling.split_label(id_col, split_weights, hash_fn=hash_fn).alias("split"),
         text_ops.token_count(text_col).cast("long").alias("n_tokens"),
     )
 
 
-def curate_corpus_v2(
-    docs: DataFrame,
-    blocked: DataFrame | None = None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    url_col: str = "url",
-    blocked_col: str = "domain",
-    min_margin: int = 2,
-    domain_cap: int = 20,
-    q_micro_min: int = 150_000,
-    split_weights: tuple[float, float, float] = (0.98, 0.01, 0.01),
-    hash_fn: str = "xxhash64",
-    checkpoint_gated: bool = True,
-) -> DataFrame:
-    """The RefinedWeb/Dolma-shape curation pipeline over (id, text, url)
-    rows, composing the r8/r9 primitives into ONE lazy plan:
-
-    1. confidence-gated language ID (``langid_margin`` with
-       ``keep=(text, url)`` — the label rides the scan, no re-join);
-       rows whose lang_conf is 'und' drop;
-    2. registered-domain BLOCKLIST as a broadcast left-anti join
-       (``domain_blocklist_filter_table`` semantics, list = DATA);
-    3. QUALITY gate on exact integer micro-units:
-       floor(quality_score·1e6) >= q_micro_min — floor is binary-exact
-       in both engines, so the gate has NO float tie boundary (the
-       domain_stats discipline applied to a filter);
-    4. per-domain QUOTA (``cap_per_group`` — deterministic hash order,
-       one domain-keyed window);
-    5. exact DEDUPE (min-id keeps, slim fingerprint exchange);
-    6. deterministic SPLIT label.
-
-    Returns (id, lang, domain, split, n_tokens) for surviving docs.
-
-    Scale shape: langid + domain + quality are scan-level projections;
-    the blocklist never shuffles the corpus (broadcast anti-join); the
-    quota window is the pipeline's one domain-keyed corpus exchange
-    (text rides as PAYLOAD, never a key — pair with AQE skew split for
-    celebrity domains); the dedupe windows a slim (id, fp) projection
-    and anti-joins losers back by id. Stage order is the curation-
-    standard one: cheap row-local gates first (langid, blocklist,
-    quality — ADVICE r9: the quality gate runs BEFORE the quota so a
-    low-quality page can never consume a domain's cap and evict a
-    high-quality one, matching `curate_increment`), the per-domain
-    rules before dedupe (a domain's quota should not be refilled by
-    its own near-identical pages), split LAST so losers don't consume
-    split capacity.
-
-    ``checkpoint_gated`` (r13, the v3 barrier applied here): a lazy
-    localCheckpoint of the gated survivors. Without it, filter/projection
-    pushdown substitutes the staged langid/quality expression trees into
-    every downstream reference — the analyzed plan is ~25× larger (414 KB
-    vs 16 KB formatted) and Catalyst pays that on every action. Same
-    values either way. FAULT-TOLERANCE TRADEOFF (ADVICE r13):
-    localCheckpoint stores UNREPLICATED executor-local blocks and cuts
-    the lineage that would rebuild them, so losing any executor that
-    holds a block (spot reclaim, dynamic-allocation scale-down, OOM
-    kill) fails the job unrecoverably. Pass False — or swap the barrier
-    for a reliable ``df.checkpoint()`` under cluster storage — on
-    deployments with executor churn; pass False too when executors are
-    disk-constrained."""
-    qual = _corpus_gated(
-        docs, blocked, id_col, text_col, url_col, blocked_col,
-        min_margin, q_micro_min, barrier=checkpoint_gated,
-    )
-    if checkpoint_gated:
-        qual = qual.localCheckpoint(eager=False)
-    quota = sampling.cap_per_group(
-        qual, "domain", domain_cap, id_col=id_col, hash_fn=hash_fn
-    )
-    deduped = dedup_ops.exact_dedupe(quota, id_col=id_col, text_col=text_col)
-    return deduped.select(
-        F.col(id_col),
-        "lang",
-        "domain",
-        sampling.split_label(id_col, split_weights, hash_fn=hash_fn).alias("split"),
-        text_ops.token_count(text_col).cast("long").alias("n_tokens"),
-    )
-
-
-def curate_corpus_v3(
-    docs: DataFrame,
-    blocked: DataFrame | None = None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    url_col: str = "url",
-    blocked_col: str = "domain",
-    min_margin: int = 2,
-    domain_cap: int = 20,
-    q_micro_min: int = 150_000,
-    rep_dup_line_micro_max: int = 300_000,
-    rep_top_bigram_micro_max: int = 200_000,
-    split_weights: tuple[float, float, float] = (0.98, 0.01, 0.01),
-    hash_fn: str = "xxhash64",
-    checkpoint_gated: bool = True,
-) -> DataFrame:
-    """`curate_corpus_v2` with the REPETITION gate composed in (r10):
-    shape-based quality (length/punctuation) passes SEO spam that
-    repeats itself; `repetition_signals` catches it. Stage order:
-    langid → blocklist → quality → REPETITION gate (dup-line fraction
-    and top-bigram char coverage, both cut on floor(frac·1e6) integer
-    micro-units — binary-exact in both engines, the quality-gate
-    discipline) → per-domain quota → exact dedupe → split.
-
-    Plan shape: the fold-form `repetition_signals` is a row-local
-    projection, so the gate FILTERS on passthrough columns — the
-    original signal-frame id-join (text as payload on that exchange) is
-    gone; the filter form measured parity with the join locally and
-    saves the shuffle at scale. The ``checkpoint_gated`` barrier
-    (lazy localCheckpoint of the gated survivors to executor disk)
-    REMAINS LOAD-BEARING for a different reason than the r10 branch
-    dedup: without it, predicate pushdown collapses the staged
-    langid/quality/fold projections and substitutes their expression
-    trees into every downstream reference (the executed plan carries
-    165 copies of the langid regexp machinery) — three-arm interleaved
-    A/B at sf0.1 (tools/ab_curation_v3_ckpt.py, min-of-4): barrier-less
-    linear 17.7 s vs checkpoint+filter 14.2 s vs the old
-    checkpoint+join 13.9 s (filter/join = 1.02×, within noise). Pass
-    ``checkpoint_gated=False`` for the fully-lazy single plan when
-    executors are disk-constrained — or under executor churn: the
-    barrier's blocks are unreplicated executor-local state with no
-    lineage behind them (see curate_corpus_v2's docstring for the full
-    failure mode)."""
-    qual = _corpus_gated(
-        docs, blocked, id_col, text_col, url_col, blocked_col,
-        min_margin, q_micro_min, barrier=checkpoint_gated,
-    )
-    if checkpoint_gated:
-        qual = qual.localCheckpoint(eager=False)
-    kept = (
-        text_ops.repetition_signals(
-            qual, col=text_col, id_col=id_col, keep=(text_col, "lang", "domain")
-        )
-        .filter(
-            (
-                F.floor(F.col("dup_line_frac") * F.lit(1_000_000.0)).cast("long")
-                <= F.lit(rep_dup_line_micro_max)
-            )
-            & (
-                F.floor(F.col("top_bigram_char_frac") * F.lit(1_000_000.0)).cast(
-                    "long"
-                )
-                <= F.lit(rep_top_bigram_micro_max)
-            )
-        )
-        .select(id_col, text_col, "lang", "domain")
-    )
-    quota = sampling.cap_per_group(
-        kept, "domain", domain_cap, id_col=id_col, hash_fn=hash_fn
-    )
-    deduped = dedup_ops.exact_dedupe(quota, id_col=id_col, text_col=text_col)
-    return deduped.select(
-        F.col(id_col),
-        "lang",
-        "domain",
-        sampling.split_label(id_col, split_weights, hash_fn=hash_fn).alias("split"),
-        text_ops.token_count(text_col).cast("long").alias("n_tokens"),
-    )
-
-
-def _corpus_gated(
-    docs: DataFrame,
-    blocked: DataFrame | None,
-    id_col: str,
-    text_col: str,
-    url_col: str,
-    blocked_col: str,
-    min_margin: int,
-    q_micro_min: int,
-    keep_extra: tuple = (),
-    barrier: bool = True,
-) -> DataFrame:
-    """Stages 1-3 of whole-corpus curation, shared by v2 and v3 (and the
-    streaming curate_stream — `keep_extra` threads the event-time column
-    through for its watermark): confidence langid (label rides the
-    scan), optional broadcast blocklist anti-join on the registered
-    domain, integer micro-unit quality gate. Returns
-    (id, text, url, *keep_extra, lang, domain).
-
-    r13: the input is `spread()` first — the langid/quality/domain
-    expression chain is row-local CPU work, and a few-MB corpus arrives
-    as 1-2 scan splits, pinning the whole gate stage (and the barrier
-    checkpoint that materializes it) to 1-2 cores; at scale the scan
-    has enough splits and spread is a no-op costing only the check.
-
-    r14: the scored langid projection gets its own `_gate_barrier`
-    BEFORE the lang_conf filter — see the helper's docstring for the
-    pushdown-substitution duplication it removes (the gate chain was
-    paying ~17 evaluations of the token machinery per row)."""
-    scored = _gate_barrier(
-        text_ops.langid_margin(
-            _spread(docs.select(id_col, text_col, url_col, *keep_extra)),
-            col=text_col,
-            id_col=id_col,
-            min_margin=min_margin,
-            keep=(text_col, url_col, *keep_extra),
-        ),
-        barrier,
-    )
-    lang_ok = (
-        scored
-        .filter(F.col("lang_conf") != "und")
-        .select(
-            id_col, text_col, url_col, *keep_extra,
-            F.col("lang_conf").alias("lang"),
-        )
-    )
-    dom = lang_ok.withColumn("domain", text_ops.registered_domain(url_col))
-    if blocked is not None:
-        dom = dom.join(
-            F.broadcast(blocked.select(F.col(blocked_col).alias("domain"))),
-            "domain",
-            "left_anti",
-        )
-    return dom.filter(
-        F.floor(text_ops.quality_score(text_col) * F.lit(1_000_000.0)).cast("long")
-        >= F.lit(q_micro_min)
-    )
-
-
-def curate_increment(
+def admit(
     batch: DataFrame,
     corpus: DataFrame,
-    blocked: DataFrame | None = None,
+    gates: list[Gate],
+    domain_cap: int = 20,
+    hash_fn: str = "xxhash64",
+    neardup_threshold: float | None = None,
+    num_perm: int = 64,
+    shingle_k: int = 3,
+    bands: int = 16,
+    corpus_state: tuple[DataFrame, DataFrame] | None = None,
     id_col: str = "doc_id",
     text_col: str = "text",
     url_col: str = "url",
-    blocked_col: str = "domain",
-    min_margin: int = 2,
-    domain_cap: int = 20,
-    q_micro_min: int = 150_000,
-    hash_fn: str = "xxhash64",
-    checkpoint_gated: bool = True,
 ) -> DataFrame:
     """Incremental ADMISSION of a new crawl batch against an existing
-    curated corpus — the steady-state production shape (a pipeline
-    curates the whole web once, then admits daily crawls forever; the
-    `dedup_incremental_pairs` marginal-cost thesis applied to the whole
-    curation stack):
+    curated corpus — the steady-state production shape (curate the web
+    once, then admit daily crawls forever):
 
-    1. row-local gates on the BATCH only: confidence langid, optional
-       blocklist anti-join, integer micro-unit quality;
+    1. `gates` on the BATCH only (`web_gates`: admission needs its
+       `lang` and `domain`);
     2. exact dedupe WITHIN the batch (min-id keeps), then against the
-       CORPUS — the corpus contributes only its 32-byte fingerprint
-       set, reduced map-side, never its documents;
-    3. per-domain quota ACCOUNTING: the corpus contributes only
+       CORPUS — the corpus contributes only its fingerprint set, reduced
+       map-side, never its documents;
+    3. with `neardup_threshold` set, the NEAR-dup screen: an incremental
+       MinHash probe drops every batch row that near-dups a corpus doc or
+       a smaller-id batch row at J ≥ the threshold — a recrawl differing
+       only by boilerplate survives the exact anti-join but should not
+       be admitted;
+    4. per-domain quota ACCOUNTING: the corpus contributes only
        (domain, count); a batch row is admitted while
-       existing + hash-order-rank ≤ domain_cap, so a domain the corpus
-       already filled admits nothing and a fresh domain admits up to
-       the cap.
+       existing + hash-order-rank ≤ domain_cap.
 
-    Returns (id, lang, domain, n_tokens) of ADMITTED batch rows.
+    Returns (id, lang, domain, n_tokens) of ADMITTED batch rows. Dedupe
+    runs BEFORE quota here (unlike `curate`) so near-identical recrawls
+    cannot consume a domain's remaining quota. Marginal cost is
+    proportional to the batch, not the corpus: the corpus is scanned
+    once per reduction and never re-shuffled in full.
 
-    Scale shape: batch-side work is the same three slim-keyed exchanges
-    as `curate_corpus_v2`; the corpus is scanned once per reduction
-    (fingerprints, domain counts — both collapse map-side to
-    ~|distinct| rows) and NEVER re-shuffled in full. Marginal cost is
-    proportional to the batch, not the corpus — the property that makes
-    daily admission affordable at a 100-TB standing corpus. Stage order
-    differs from `curate_corpus_v2` deliberately: dedupe runs BEFORE
-    quota here so near-identical recrawls cannot consume a domain's
-    remaining quota.
-
-    ``checkpoint_gated`` (r13, the v3 barrier): lazy localCheckpoint of
-    the gated NOVEL batch rows (contractually the small side). Without it
-    the quota stage's multiple references substitute the full gate
-    expression trees — the analyzed plan is ~80× larger (1.26 MB vs
-    16 KB formatted) and Catalyst pays that per action. Same values.
-    Executor churn loses the barrier's unreplicated blocks and fails the
-    job (see curate_corpus_v2's docstring); pass False there."""
-    novel = _increment_gated_novel(
-        batch, corpus, blocked, id_col, text_col, url_col, blocked_col,
-        min_margin, q_micro_min, barrier=checkpoint_gated,
-    )
-    if checkpoint_gated:
-        novel = novel.localCheckpoint(eager=False)
-    return _admit_by_quota(
-        novel, corpus, id_col, text_col, url_col, domain_cap, hash_fn
-    )
-
-
-def _increment_gated_novel(
-    batch: DataFrame,
-    corpus: DataFrame,
-    blocked: DataFrame | None,
-    id_col: str,
-    text_col: str,
-    url_col: str,
-    blocked_col: str,
-    min_margin: int,
-    q_micro_min: int,
-    corpus_fps: DataFrame | None = None,
-    barrier: bool = True,
-) -> DataFrame:
-    """Stages 1-2 of incremental admission, shared by `curate_increment`
-    and `curate_increment_v2`: row-local gates on the batch (confidence
-    langid, optional broadcast blocklist anti-join, integer micro-unit
-    quality), within-batch exact dedupe, then the corpus-fingerprint
-    anti-join. Returns the gated NOVEL batch rows
-    (id, text, url, lang, domain).
-
-    `corpus_fps` is the stored-reduction form (one `__fp` column, the
-    distinct corpus fingerprint set): pass it when the pipeline persists
-    fingerprints at admission (`streaming/curation.py:curate_stream_v2`)
-    and the corpus text is never re-scanned here; `corpus` may then be
-    None. Without it the fingerprint set derives from `corpus`.
-
-    r13 note: spreading the batch before the gates was tried and
-    measured 1.11-1.12x SLOWER interleaved on both increment queries —
-    the BATCH gate chain is too light to pay for the repartition
-    (contrast _corpus_gated, where the corpus-side gates win). r14
-    explains WHY spread never moved this chain: the cost was pushdown
-    SUBSTITUTION, not row compute — see `_gate_barrier`. Two barriers
-    fix it: one after the scored langid projection (filters read
-    attributes, one pass of the token machinery), one after the
-    quality gate (``exact_dedupe``'s loser anti-join references its
-    input twice — the slim-exchange discipline re-ran the whole gate
-    chain per side, measured 12-13 s → 0.2-0.3 s per extra reference
-    once materialized)."""
-    scored = _gate_barrier(
-        text_ops.langid_margin(
-            batch.select(id_col, text_col, url_col),
-            col=text_col,
-            id_col=id_col,
-            min_margin=min_margin,
-            keep=(text_col, url_col),
-        ),
-        barrier,
-    )
-    lang_ok = (
-        scored
-        .filter(F.col("lang_conf") != "und")
-        .select(id_col, text_col, url_col, F.col("lang_conf").alias("lang"))
-    )
-    dom = lang_ok.withColumn("domain", text_ops.registered_domain(url_col))
-    if blocked is not None:
-        dom = dom.join(
-            F.broadcast(blocked.select(F.col(blocked_col).alias("domain"))),
-            "domain",
-            "left_anti",
+    The near-dup screen requires batch ids above corpus ids (pair
+    b-sides are then always batch rows, so the corpus is never evicted
+    by its own recrawls). Pass `corpus_state` =
+    ``minhash_corpus_state(corpus)`` (stored at ingest) so the corpus
+    text is never re-shingled; without it the state derives here — only
+    slim (id, hash) rows ride any exchange either way. At threshold ≥
+    0.9 the 64-perm/16-band LSH candidate recall is ≈ 1, so an
+    exact-Jaccard oracle gates the whole composition."""
+    c = _Cols(id_col, text_col, url_col)
+    novel = _gate_barrier(
+        _novel(
+            _gated(batch, gates, c),
+            corpus.select(text_ops.fingerprint(text_col).alias("__fp")).distinct(),
+            c,
         )
-    qual = _gate_barrier(
-        dom.filter(
-            F.floor(text_ops.quality_score(text_col) * F.lit(1_000_000.0)).cast("long")
-            >= F.lit(q_micro_min)
-        ),
-        barrier,
     )
-    within = dedup_ops.exact_dedupe(qual, id_col=id_col, text_col=text_col)
-    corpus_fp = (
-        corpus_fps.select("__fp")
-        if corpus_fps is not None
-        else corpus.select(text_ops.fingerprint(text_col).alias("__fp")).distinct()
+    if neardup_threshold is not None:
+        novel = _drop_near_dups(
+            novel, corpus.select(id_col, text_col), c, neardup_threshold,
+            num_perm, shingle_k, bands, corpus_state,
+        )
+    have = (
+        corpus.select(text_ops.registered_domain(url_col).alias("domain"))
+        .groupBy("domain")
+        .agg(F.count(F.lit(1)).alias("__have"))
     )
+    return _admit_by_quota(novel, have, domain_cap, hash_fn, c)
+
+
+def _novel(gated: DataFrame, corpus_fp: DataFrame, c: _Cols) -> DataFrame:
+    """Admission stage 2: within-batch exact dedupe, then the left-anti
+    join against the corpus fingerprint set `corpus_fp` (one `__fp`
+    column — derived from the corpus by `admit`, read from stored state
+    by `curate_stream_v2`)."""
+    within = dedup_ops.exact_dedupe(gated, id_col=c.id, text_col=c.text)
     return (
-        within.withColumn("__fp", text_ops.fingerprint(text_col))
+        within.withColumn("__fp", text_ops.fingerprint(c.text))
         .join(corpus_fp, "__fp", "left_anti")
         .drop("__fp")
     )
 
 
+def _drop_near_dups(
+    novel: DataFrame,
+    corpus: DataFrame | None,
+    c: _Cols,
+    threshold: float,
+    num_perm: int,
+    shingle_k: int,
+    bands: int,
+    corpus_state: tuple[DataFrame, DataFrame] | None,
+) -> DataFrame:
+    """Admission stage 3: drop the distinct b-sides of the incremental
+    MinHash pairs. Pairs are canonical (a < b) with at least one batch
+    side and batch ids sit above corpus ids, so b is ALWAYS a batch row:
+    this evicts corpus near-dups and keeps the min-id batch row of every
+    within-batch near-dup group (the exact-dedupe convention)."""
+    pairs = dedup_ops.minhash_incremental_pairs(
+        novel.select(c.id, c.text),
+        corpus,
+        id_col=c.id,
+        text_col=c.text,
+        num_perm=num_perm,
+        k=shingle_k,
+        bands=bands,
+        threshold=threshold,
+        corpus_state=corpus_state,
+    )
+    losers = pairs.select(F.col("b").alias(c.id)).distinct()
+    return novel.join(losers, c.id, "left_anti")
+
+
 def _admit_by_quota(
     novel: DataFrame,
-    corpus: DataFrame,
-    id_col: str,
-    text_col: str,
-    url_col: str,
+    have: DataFrame,
     domain_cap: int,
     hash_fn: str,
-    have: DataFrame | None = None,
-    quota_keys: list[str] | None = None,
+    c: _Cols,
+    quota_keys: tuple[str, ...] = ("domain",),
     keep_cols: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Stage 3 of incremental admission: per-domain remaining-quota
-    ranking. The corpus contributes only (domain, count) — reduced
-    map-side, never re-shuffled in full. `have` is the stored-reduction
-    form ((domain, __have) — per-domain admitted counts maintained at
-    admission time, `streaming/curation.py:curate_stream_v2`); `corpus`
-    may then be None and is never scanned.
+    """Admission stage 4: per-domain remaining-quota ranking. `have` holds
+    the admitted counts per quota key (*quota_keys, __have) — reduced from
+    the corpus by `admit`, maintained at admission by `curate_stream_v2`.
 
-    `quota_keys` (default ["domain"]) is the quota's group key: pass
-    ["domain", "__day"] for a PER-EVENT-DAY domain cap (the daily mode
-    of `curate_stream_v2` — `have` must then carry the same keys). Keys
-    beyond "domain" must already be columns of `novel` and survive into
-    the output so the caller can maintain keyed counts.
-
-    `keep_cols` names extra `novel` columns passed through to the
-    output. Keeping `text_col` is FREE: every `novel` column already
-    rides the quota window's shuffle (the select below is what drops
-    them), so a caller that needs admitted text avoids re-joining it —
-    `curate_stream_v2`'s admission uses this to make the admitted frame
-    serve as its own doc set (r12 A/B: tools/ab_increment_v2_writes.py)."""
-    keys = list(quota_keys) if quota_keys else ["domain"]
-    if have is None:
-        have = (
-            corpus.select(text_ops.registered_domain(url_col).alias("domain"))
-            .groupBy("domain")
-            .agg(F.count(F.lit(1)).alias("__have"))
-        )
-    w = Window.partitionBy(*keys).orderBy(
-        sampling._bucket(id_col, "cap", hash_fn).asc(), F.col(id_col).asc()
+    `quota_keys` ("domain" plus, for `curate_stream_v2`'s daily mode,
+    "__day") must be columns of `novel`; keys beyond "domain" survive into
+    the output so the caller can maintain keyed counts. `keep_cols` names
+    extra `novel` columns passed through. Keeping the text is FREE: every
+    `novel` column already rides the quota window's shuffle, so
+    `curate_stream_v2`'s admitted frame doubles as its doc set (r12 A/B:
+    tools/ab_increment_v2_writes.py)."""
+    w = Window.partitionBy(*quota_keys).orderBy(
+        sampling._bucket(c.id, "cap", hash_fn).asc(), F.col(c.id).asc()
     )
-    extra = [k for k in keys if k != "domain"]
     return (
         novel.withColumn("__rn", F.row_number().over(w))
-        .join(have, keys, "left")
+        .join(have, list(quota_keys), "left")
         .filter(
             F.col("__rn") <= F.lit(domain_cap) - F.coalesce(F.col("__have"), F.lit(0))
         )
         .select(
-            F.col(id_col),
-            "lang",
-            "domain",
-            text_ops.token_count(text_col).cast("long").alias("n_tokens"),
-            *extra,
+            F.col(c.id),
+            *_LABELS,
+            text_ops.token_count(c.text).cast("long").alias("n_tokens"),
+            *[k for k in quota_keys if k != "domain"],
             *keep_cols,
         )
-    )
-
-
-def curate_increment_v2(
-    batch: DataFrame,
-    corpus: DataFrame,
-    blocked: DataFrame | None = None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    url_col: str = "url",
-    blocked_col: str = "domain",
-    min_margin: int = 2,
-    domain_cap: int = 20,
-    q_micro_min: int = 150_000,
-    hash_fn: str = "xxhash64",
-    neardup_threshold: float = 0.9,
-    num_perm: int = 64,
-    shingle_k: int = 3,
-    bands: int = 16,
-    corpus_state: tuple[DataFrame, DataFrame] | None = None,
-    checkpoint_gated: bool = True,
-) -> DataFrame:
-    """`curate_increment` with the NEAR-dup corpus screen composed into
-    admission (VERDICT r9 item 7): a recrawl that differs from a corpus
-    page only by boilerplate survives the exact-fingerprint anti-join
-    but should not be admitted — exactly what `minhash_incremental_pairs`
-    screens for at batch-proportional cost. Stage order: row-local
-    gates → within-batch exact dedupe → corpus exact-fp anti-join →
-    incremental MinHash probe (drop every batch row that near-dups a
-    corpus doc or a smaller-id batch row, J ≥ `neardup_threshold`) →
-    remaining-quota ranking.
-
-    Requires batch ids above corpus ids (the incremental convention —
-    pair b-sides are then always batch rows, so the corpus is never
-    evicted by its own recrawls). Pass `corpus_state` =
-    ``minhash_corpus_state(corpus)`` (persisted/stored at ingest) for
-    the production shape: the corpus text is then never re-shingled and
-    per-batch cost collapses to batch shingles + one bucket-keyed probe
-    against the stored band table. Without it the corpus state derives
-    here — still only slim (id, hash) rows ride any exchange; corpus
-    TEXT never shuffles in either form.
-
-    Same oracle discipline as the dedup_incremental family: at
-    threshold ≥ 0.9 the 64-perm/16-band LSH candidate recall is ≈ 1,
-    so an exact-Jaccard oracle gates the whole composition."""
-    # The gated-novel subtree (langid scoring, windows, two anti-joins)
-    # feeds THREE consumers here — the probe's shingle side, the loser
-    # anti-join's left side, and (transitively) the final quota — so it
-    # is materialized once. The cache holds the BATCH's survivors (the
-    # contractually small side of incremental admission), never the
-    # corpus. Without this the gate pipeline re-executes per consumer
-    # (measured 94 s -> see SURVEY r10 for the A/B). r13: a lazy
-    # localCheckpoint instead of persist() — it caches the SAME rows AND
-    # truncates the logical plan, so the three consumers stop embedding
-    # the full gate tree (analyzed plan was 1.78 MB formatted with
-    # persist, whose cache only dedups EXECUTION, not Catalyst analysis,
-    # which re-walked the tree per action). checkpoint_gated=False keeps
-    # the old plan-keyed persist (shared across repeated calls) — and is
-    # the executor-churn-safe form: the barrier's blocks are unreplicated
-    # executor-local state (see curate_corpus_v2's docstring).
-    novel = _increment_gated_novel(
-        batch, corpus, blocked, id_col, text_col, url_col, blocked_col,
-        min_margin, q_micro_min, barrier=checkpoint_gated,
-    )
-    novel = (
-        novel.localCheckpoint(eager=False) if checkpoint_gated else novel.persist()
-    )
-    pairs = dedup_ops.minhash_incremental_pairs(
-        novel.select(id_col, text_col),
-        corpus.select(id_col, text_col),
-        id_col=id_col,
-        text_col=text_col,
-        num_perm=num_perm,
-        k=shingle_k,
-        bands=bands,
-        threshold=neardup_threshold,
-        corpus_state=corpus_state,
-    )
-    # canonical pairs (a < b) with at least one batch side; batch ids sit
-    # above corpus ids, so b is ALWAYS a batch row: dropping distinct
-    # b-sides evicts corpus near-dups and keeps the min-id batch row of
-    # every within-batch near-dup group (the exact-dedupe convention)
-    losers = pairs.select(F.col("b").alias(id_col)).distinct()
-    screened = novel.join(losers, id_col, "left_anti")
-    return _admit_by_quota(
-        screened, corpus, id_col, text_col, url_col, domain_cap, hash_fn
     )
 
 

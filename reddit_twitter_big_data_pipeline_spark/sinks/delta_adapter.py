@@ -203,12 +203,14 @@ def merge_upsert_partitioned_auto(
     Out-of-contract inputs corrupt DIFFERENTLY per route (ADVICE r12) —
     worth knowing when debugging a violated contract: a key that moves
     partitions misses the Delta match condition and lands as a DUPLICATE
-    key via whenNotMatchedInsertAll, while the parquet fallback dedupes
-    the duplicate away (dropping the old-partition row) whenever the old
-    partition is also touched by the batch. Neither shape is the merge's
+    key via whenNotMatchedInsertAll. The parquet fallback shows either
+    symptom, depending on the batch: when the batch also touches the old
+    partition, the merge dedupes the duplicate away (the old-partition
+    row VANISHES); when it does not, the old partition is never read and
+    the key lands as a DUPLICATE there too. Neither shape is the merge's
     semantics — both are the documented precondition being violated —
-    but a duplicate-key symptom points at the Delta route and a
-    vanished-row symptom at the parquet route. The debug assertion that
+    so a vanished row points at the parquet route, while a duplicate key
+    fits either route. The debug assertion that
     catches it on either route BEFORE merging is
     ``partition_moved_keys`` (one extra target scan per call) —
     deliberately not built into the merge path; gate on it in
@@ -246,8 +248,10 @@ def partition_moved_keys(
     ``merge_upsert_partitioned_auto``'s contract (ADVICE r12 / VERDICT
     r13 item 8): distinct update keys that already exist in the target
     under a DIFFERENT partition value — exactly the out-of-contract
-    input that corrupts differently per route (duplicate key on Delta,
-    vanished row on parquet; see merge_upsert_partitioned_auto). Empty
+    input that corrupts differently per route (duplicate key on Delta;
+    on parquet a vanished old row when the batch also touches the old
+    partition, else a duplicate key; see merge_upsert_partitioned_auto).
+    Empty
     result ⇒ the batch is safe on either route. Costs one target scan;
     run it as a gate (``assert df.isEmpty()``) in deployments that
     cannot prove the partition-stability invariant upstream.

@@ -1,25 +1,30 @@
-"""Streaming corpus curation — the batch `curate_*` gate stack applied to
-a document STREAM ("curate the crawl as it lands"), the steady-state
-shape between full-corpus curation (`plans/training.py:curate_corpus_v2`)
-and daily batch admission (`curate_increment`). The reference has no
-streaming at all (SURVEY §2.6 extension).
+"""Streaming corpus curation — the batch curation builder's gate stack
+applied to a document STREAM ("curate the crawl as it lands"), the
+steady-state shape between whole-corpus curation
+(`plans/training.py:curate`) and daily batch admission (`admit`). The
+reference has no streaming at all (SURVEY §2.6 extension).
 
-Stage map — every stage reuses the batch stack's single definition:
+Stage map of `curate_stream` — the gates are the builder's single
+definition:
 
-1. row-local gates: `plans.training._corpus_gated` (confidence langid,
+1. row-local gates: `plans.training.web_gates` (confidence langid,
    broadcast blocklist anti-join, integer micro-unit quality) — pure
-   column expressions and a stream-static join, streaming-safe as-is;
-   the event-time column threads through via its `keep_extra`;
+   column expressions and a stream-static join, streaming-safe as-is
+   (the gate barriers are no-ops on a stream); every input column,
+   the event-time one included, passes through;
 2. exact dedup: watermark + `dropDuplicatesWithinWatermark` on the
    content fingerprint (`operators/text.py:fingerprint`) — state is one
    16-byte fp per surviving doc inside the horizon, expiring with the
    watermark;
 3. per-domain quota: `domain_quota_admit`, a custom stateful operator
    (`applyInPandasWithState`) whose state is ONE LONG per domain (total
-   admitted so far) — the streaming twin of `curate_increment`'s
-   remaining-quota ranking. Within a micro-batch rows admit in id order
+   admitted so far) — the streaming twin of `admit`'s remaining-quota
+   ranking. Within a micro-batch rows admit in id order
    (the deterministic tiebreak); across batches, arrival order decides,
    which IS the streaming admission semantic.
+
+`curate_stream_v2` instead runs `admit`'s stages per micro-batch against
+stored corpus state (see its docstring).
 
 State discipline (the 100-TB rules, matching stateful.py): quota state
 is a single counter per domain — never buffered rows; dedup state is
@@ -50,7 +55,14 @@ from pyspark.sql.utils import AnalysisException
 from .._serde import register_self
 from ..operators import dedup as dedup_ops
 from ..operators import text as text_ops
-from ..plans.training import _admit_by_quota, _corpus_gated, _increment_gated_novel
+from ..plans.training import (
+    _Cols,
+    _admit_by_quota,
+    _drop_near_dups,
+    _gated,
+    _novel,
+    web_gates,
+)
 from ..sinks import writers
 from ..sinks import delta_adapter
 
@@ -212,9 +224,10 @@ def curate_stream(
     cadence), with `dedup_delay` doubling as the quota day-keying (the watermark itself is set once, at the dedup stage)."""
     if quota_mode not in ("lifetime", "daily"):
         raise ValueError("curate_stream: quota_mode must be 'lifetime' or 'daily'")
-    gated = _corpus_gated(
-        stream, blocked, id_col, text_col, url_col, blocked_col,
-        min_margin, q_micro_min, keep_extra=(ts_col,),
+    gated = _gated(
+        stream.select(id_col, text_col, url_col, ts_col),
+        web_gates(blocked, min_margin, q_micro_min, blocked_col),
+        _Cols(id_col, text_col, url_col),
     )
     deduped = (
         gated.withColumn("__fp", text_ops.fingerprint(text_col))
@@ -292,8 +305,8 @@ def curate_stream_v2(
     quota_mode: str = "lifetime",
     date_col: str | None = None,
 ) -> StreamingQuery:
-    """`curate_increment_v2` as a STREAM (VERDICT r10 item 5): each
-    micro-batch runs the BATCH admission stack — row-local gates,
+    """`admit` with the near-dup screen as a STREAM (VERDICT r10 item 5):
+    each micro-batch runs the BATCH admission stages — row-local gates,
     within-batch exact dedupe, corpus exact-fp anti-join, incremental
     MinHash near-dup probe, per-domain remaining-quota ranking — against
     stored corpus state, then grows that state with what it admitted.
@@ -351,6 +364,8 @@ def curate_stream_v2(
     the output schema both differ); point a mode switch at fresh
     dirs for both."""
     rows_per_band = num_perm // bands
+    cols = _Cols(id_col, text_col, url_col)
+    gates = web_gates(blocked, min_margin, q_micro_min, blocked_col)
     if quota_mode not in ("lifetime", "daily"):
         raise ValueError("curate_stream_v2: quota_mode must be 'lifetime' or 'daily'")
     if quota_mode == "daily" and date_col is None:
@@ -378,7 +393,7 @@ def curate_stream_v2(
             batch_id,
         )
         if quota_mode == "daily":
-            quota_keys = ["domain", "__day"]
+            quota_keys = ("domain", "__day")
             have = (
                 _read_state(
                     spark, os.path.join(state_dir, "domains"),
@@ -388,7 +403,7 @@ def curate_stream_v2(
                 .agg(F.sum("n").alias("__have"))
             )
         else:
-            quota_keys = ["domain"]
+            quota_keys = ("domain",)
             have = (
                 _read_state(
                     spark, os.path.join(state_dir, "domains"), "domain string, n long",
@@ -397,9 +412,8 @@ def curate_stream_v2(
                 .groupBy("domain")
                 .agg(F.sum("n").alias("__have"))
             )
-        novel = _increment_gated_novel(
-            batch, None, blocked, id_col, text_col, url_col, blocked_col,
-            min_margin, q_micro_min, corpus_fps=fps,
+        novel = _novel(
+            _gated(batch.select(id_col, text_col, url_col), gates, cols), fps, cols
         ).persist()
         # id-monotonicity invariant (ADVICE r11): the convention protects
         # the probe's b-side-is-batch-row labeling, so the rows that must
@@ -424,18 +438,6 @@ def curate_stream_v2(
                 "incremental near-dup convention); a violating stream "
                 "would silently admit near-duplicates."
             )
-        pairs = dedup_ops.minhash_incremental_pairs(
-            novel.select(id_col, text_col),
-            None,
-            id_col=id_col,
-            text_col=text_col,
-            num_perm=num_perm,
-            k=shingle_k,
-            bands=bands,
-            threshold=neardup_threshold,
-            corpus_state=(ex_old, b_old),
-        )
-        losers = pairs.select(F.col("b").alias(id_col)).distinct()
         # screened is consumed exactly once (by the quota ranking), so it
         # carries no cache; the quota output keeps `text` via keep_cols —
         # FREE, the text column already rides the quota window's shuffle
@@ -445,7 +447,10 @@ def curate_stream_v2(
         # 0.993x min / 0.96x median, outputs identical
         # (tools/ab_increment_v2_writes.py) — landed for the structural
         # win: 3 persists instead of 4, one less batch-text cache copy.
-        screened = novel.join(losers, id_col, "left_anti")
+        screened = _drop_near_dups(
+            novel, None, cols, neardup_threshold, num_perm, shingle_k, bands,
+            (ex_old, b_old),
+        )
         if quota_mode == "daily":
             # thread the event day through (novel dropped it): one
             # batch-sized id->date join, the day becomes a quota key. A
@@ -483,8 +488,8 @@ def curate_stream_v2(
         else:
             ranked = screened
         adm_docs = _admit_by_quota(
-            ranked, None, id_col, text_col, url_col, domain_cap, hash_fn,
-            have=have, quota_keys=quota_keys, keep_cols=(text_col,),
+            ranked, have, domain_cap, hash_fn, cols,
+            quota_keys=quota_keys, keep_cols=(text_col,),
         ).persist()
         admitted = adm_docs.drop(text_col)
 

@@ -1,12 +1,18 @@
 """Concrete connector wrappers (connectors.py): record-shape parity with
-the reference's committed landing dumps, window/skip semantics through
-the real fetch_topics seam, and the neo4j transport's transient mapping
-— all with faked clients (none of praw/snscrape/neo4j is installed
-here; that absence is itself under test via the import guards)."""
+the reference's landing format, window/skip semantics through the real
+fetch_topics seam, and the neo4j transport's transient mapping — all
+with faked clients (none of praw/snscrape/neo4j is installed here; that
+absence is itself under test via the import guards).
+
+The landing records are inline fixtures built from the reference's field
+lists (SURVEY.md §1.2, FIXTURES.md §1-3); the round-trip over the
+reference's own committed dumps runs as an extra check when a reference
+checkout is present."""
 
 from __future__ import annotations
 
 import json
+import os
 import sys
 import types
 from datetime import datetime
@@ -22,6 +28,63 @@ _REF = "/root/reference"
 _POSTS_DUMP = f"{_REF}/reddit/development/reddit_posts_dump3.json"
 _COMMENTS_DUMP = f"{_REF}/reddit/development/reddit_comments_dump3.json"
 _TWEETS_DUMP = f"{_REF}/neo4j_insert/twitter_dump.json"
+
+# reddit/lambda_function.py:46-55 — field order and P1 casts; link posts
+# carry "" content, removed ones "[deleted]"
+_POSTS = [
+    {
+        "id": "11yav43", "date": "2023-03-22 18:04:11",
+        "title": "Drone footage from the front near Bakhmut",
+        "content": "", "username": "CookPass", "commentCount": 41,
+        "score": 812, "subreddit": "UkraineWarVideoReport",
+    },
+    {
+        "id": "11z0k2p", "date": "2023-03-23 07:45:59",
+        "title": "Daily discussion thread", "content": "[deleted]",
+        "username": "AutoModerator", "commentCount": 3, "score": 1,
+        "subreddit": "ukraine",
+    },
+    {
+        "id": "1218ymv", "date": "2023-03-25 03:21:42",
+        "title": "Grain deal extended, what changes?",
+        "content": "Reading the terms, the corridor stays open for 60 days.",
+        "username": "kyiv_notes", "commentCount": 0, "score": 17,
+        "subreddit": "worldnews",
+    },
+]
+# reddit/lambda_function.py:62-70 — a top-level comment (t3_) and a reply
+# (t1_) under the first post
+_COMMENTS = [
+    {
+        "id": "jdkvz99", "date": "2023-03-22 18:30:02",
+        "content": "Incredible footage, stay safe.", "username": "Imaginary_Ad",
+        "score": 25, "post_id": "11yav43", "parent_id": "t3_11yav43",
+    },
+    {
+        "id": "jdkw1ab", "date": "2023-03-22 18:41:37", "content": "Agreed.",
+        "username": "CookPass", "score": -2, "post_id": "11yav43",
+        "parent_id": "t1_jdkvz99",
+    },
+]
+# twitter/lambda_function.py:30-41 — raw long id, comma-joined mentions,
+# nullable mentions/reply target
+_TWEETS = [
+    {
+        "id": 1635322899233112064, "date": "2023-03-13 16:52:16",
+        "content": "@CoinDesk @amitoj the ukraine war is moving markets again",
+        "username": "UlfaniaEda", "followersCount": 1520,
+        "mentionedUsers": "CoinDesk,amitoj", "retweetCount": 4,
+        "replyCount": 1, "inReplyToUser": "CoinDesk",
+        "timeStamp": "2023-03-13 16:45:00",
+    },
+    {
+        "id": 1635323001234567168, "date": "2023-03-13 16:53:02",
+        "content": "No peace talks this week.", "username": "newsdesk_eu",
+        "followersCount": 0, "mentionedUsers": None, "retweetCount": 0,
+        "replyCount": 0, "inReplyToUser": None,
+        "timeStamp": "2023-03-13 16:45:00",
+    },
+]
 
 
 def _ts(date_str: str) -> float:
@@ -53,25 +116,20 @@ def _fake_comment_from(rec: dict):
     )
 
 
-def test_praw_record_shapes_match_reference_dumps():
-    """Round-trip parity: a fake praw object built FROM a reference dump
-    record shapes back to EXACTLY that record (keys, values, types) —
-    pinning the field list and the P1 casts against the reference's own
-    committed landing files."""
-    posts = json.load(open(_POSTS_DUMP))
-    for rec in posts[:5]:
+def _assert_praw_round_trip(posts, comments):
+    for rec in posts:
         got = connectors.praw_post_record(_fake_post_from(rec))
         assert got == rec
+        assert list(got) == list(rec)
         assert [type(v) for v in got.values()] == [type(v) for v in rec.values()]
-    comments = json.load(open(_COMMENTS_DUMP))
-    for rec in comments[:5]:
+    for rec in comments:
         got = connectors.praw_comment_record(_fake_comment_from(rec), rec["post_id"])
         assert got == rec
+        assert list(got) == list(rec)
 
 
-def test_snscrape_record_shape_matches_reference_dump():
-    tweets = json.load(open(_TWEETS_DUMP))
-    for rec in tweets[:5]:
+def _assert_snscrape_round_trip(tweets):
+    for rec in tweets:
         fake = SimpleNamespace(
             id=rec["id"],
             date=datetime.fromisoformat(rec["date"]),
@@ -95,6 +153,30 @@ def test_snscrape_record_shape_matches_reference_dump():
         got = connectors.snscrape_tweet_record(fake, "2023-03-13 17:00:00")
         want = dict(rec, timeStamp="2023-03-13 17:00:00")
         assert got == want
+        assert list(got) == list(want)
+
+
+def test_praw_record_shapes_match_reference_dumps():
+    """Round-trip parity: a fake praw object built FROM a landing record
+    shapes back to EXACTLY that record (keys, order, values, types) —
+    pinning the field list and the P1 casts."""
+    _assert_praw_round_trip(_POSTS, _COMMENTS)
+
+
+def test_snscrape_record_shape_matches_reference_dump():
+    _assert_snscrape_round_trip(_TWEETS)
+
+
+def test_record_shapes_round_trip_the_reference_dumps():
+    """The same parity against the reference's own committed landing
+    files, when a reference checkout is present."""
+    dumps = (_POSTS_DUMP, _COMMENTS_DUMP, _TWEETS_DUMP)
+    missing = [p for p in dumps if not os.path.exists(p)]
+    if missing:
+        pytest.skip(f"reference dumps not present: {missing}")
+    posts, comments, tweets = (json.load(open(p))[:5] for p in dumps)
+    _assert_praw_round_trip(posts, comments)
+    _assert_snscrape_round_trip(tweets)
 
 
 def _make_fake_reddit(posts, comments_by_post):
@@ -135,10 +217,9 @@ def _make_fake_reddit(posts, comments_by_post):
 
 
 def _fixture_reddit():
-    posts = json.load(open(_POSTS_DUMP))[:3]
-    comments = json.load(open(_COMMENTS_DUMP))
-    # give the middle post an out-of-window timestamp; attach the dump's
-    # comments (which reference post yav43k) plus an AutoModerator one
+    posts, comments = _POSTS, _COMMENTS
+    # give the middle post an out-of-window timestamp; attach the first
+    # post's comments plus an AutoModerator one
     fakes = [
         _fake_post_from(posts[0], created_utc=_ts("2023-03-25 12:00:00")),
         _fake_post_from(posts[1], created_utc=_ts("2023-03-20 12:00:00")),  # early

@@ -1137,7 +1137,9 @@ def test_curate_corpus_composes_stages(spark):
         ],
         ["doc_id", "text"],
     )
-    out = {r.doc_id: r for r in training.curate_corpus(docs).collect()}
+    out = {r.doc_id: r for r in training.curate(
+            docs, [training.scrub(), training.min_words(10)]
+        ).collect()}
     assert set(out) == {1, 5}
     assert out[1].n_tokens == 10
     assert all(r.split in ("train", "val", "test") for r in out.values())
@@ -1176,8 +1178,8 @@ def test_curate_corpus_v2_each_stage_fires(spark):
     blocked = spark.createDataFrame([("blocked.com",)], ["domain"])
     out = {
         r.doc_id: r
-        for r in training.curate_corpus_v2(
-            docs, blocked, domain_cap=5, q_micro_min=150_000
+        for r in training.curate(
+            docs, training.web_gates(blocked, q_micro_min=150_000), domain_cap=5
         ).collect()
     }
     assert set(out) == {1, 4, 5}
@@ -1187,7 +1189,9 @@ def test_curate_corpus_v2_each_stage_fires(spark):
     # quota stage: same frame with domain_cap=1 keeps ONE doc per domain —
     # all seven urls above share registered domain keep.com except the
     # blocked one, so the survivor set collapses
-    capped = training.curate_corpus_v2(docs, blocked, domain_cap=1).collect()
+    capped = training.curate(
+        docs, training.web_gates(blocked), domain_cap=1
+    ).collect()
     assert len(capped) < len(out)
 
 
@@ -1302,20 +1306,26 @@ def test_curate_increment_admission_paths(spark):
     )
     out = {
         r.doc_id: r
-        for r in training.curate_increment(batch, corpus, domain_cap=3).collect()
+        for r in training.admit(
+            batch, corpus, training.web_gates(), domain_cap=3
+        ).collect()
     }
     assert set(out) == {102, 106}
     assert out[102].domain == "fresh.org" and out[102].lang == "en"
     # remaining-quota accounting: raising the cap re-opens the full domain
     out5 = {
         r.doc_id
-        for r in training.curate_increment(batch, corpus, domain_cap=5).collect()
+        for r in training.admit(
+            batch, corpus, training.web_gates(), domain_cap=5
+        ).collect()
     }
     assert 104 in out5
     # fresh-domain quota still caps: cap=1 admits exactly one fresh.org row
     out1 = [
         r
-        for r in training.curate_increment(batch, corpus, domain_cap=1).collect()
+        for r in training.admit(
+            batch, corpus, training.web_gates(), domain_cap=1
+        ).collect()
         if r.domain == "fresh.org"
     ]
     assert len(out1) == 1
@@ -1338,10 +1348,17 @@ def test_curate_corpus_v3_repetition_gate(spark):
         ],
         ["doc_id", "text", "url"],
     )
-    out = {r.doc_id for r in training.curate_corpus_v3(df).collect()}
+    v3_gates = [*training.web_gates(), training.repetition()]
+    out = {
+        r.doc_id
+        for r in training.curate(df, v3_gates, domain_cap=20).collect()
+    }
     assert out == {1, 4}
     # v2 (no repetition gate) admits the spam rows — the gate is the diff
-    out_v2 = {r.doc_id for r in training.curate_corpus_v2(df).collect()}
+    out_v2 = {
+        r.doc_id
+        for r in training.curate(df, training.web_gates(), domain_cap=20).collect()
+    }
     assert out_v2 == {1, 2, 3, 4}
 
 
@@ -1378,21 +1395,27 @@ def test_curate_increment_v2_near_dup_screen(spark):
     )
     out = {
         r.doc_id
-        for r in training.curate_increment_v2(batch, corpus, domain_cap=5).collect()
+        for r in training.admit(
+            batch, corpus, training.web_gates(), domain_cap=5,
+            neardup_threshold=0.9,
+        ).collect()
     }
     assert out == {103}
     # v1 (no near-dup screen) admits the corpus near-dup and both siblings
     out_v1 = {
         r.doc_id
-        for r in training.curate_increment(batch, corpus, domain_cap=5).collect()
+        for r in training.admit(
+            batch, corpus, training.web_gates(), domain_cap=5
+        ).collect()
     }
     assert out_v1 == {102, 103, 104}
     # stored-index production path: identical admission set
     state = dedup.minhash_corpus_state(corpus)
     out_state = {
         r.doc_id
-        for r in training.curate_increment_v2(
-            batch, corpus, domain_cap=5, corpus_state=state
+        for r in training.admit(
+            batch, corpus, training.web_gates(), domain_cap=5,
+            neardup_threshold=0.9, corpus_state=state,
         ).collect()
     }
     assert out_state == out

@@ -449,17 +449,21 @@ def test_partition_moved_keys_flags_contract_violation(spark, tmp_path):
     """ADVICE r12 / VERDICT r13 item 8: the pre-merge debug assertion.
     A key that moved partitions is flagged with its old and new
     partition values; a contract-clean batch yields an empty frame. Also
-    pins the documented parquet-route symptom the assertion guards
-    against: when the old partition is also touched, the parquet merge
-    DROPS the moved key's old-partition row (a vanished-row corruption,
-    not the merge's semantics)."""
+    pins both documented parquet-route symptoms the assertion guards
+    against (neither is the merge's semantics): when the batch also
+    touches the old partition, the moved key's old row VANISHES; when it
+    does not, the old row survives and the key is DUPLICATED."""
     assert not delta_adapter.delta_available()
-    path = str(tmp_path / "moved")
-    base = spark.createDataFrame(
-        [(1, "a", "one", 5), (2, "a", "two", 5), (3, "b", "three", 5)],
-        ["k", "p", "val", "v"],
-    )
-    base.write.partitionBy("p").parquet(path)
+
+    def table(name):
+        path = str(tmp_path / name)
+        spark.createDataFrame(
+            [(1, "a", "one", 5), (2, "a", "two", 5), (3, "b", "three", 5)],
+            ["k", "p", "val", "v"],
+        ).write.partitionBy("p").parquet(path)
+        return path
+
+    path = table("moved")
     # clean batch: same-partition update + fresh key -> no offenders
     clean = spark.createDataFrame(
         [(1, "a", "upd", 9), (4, "b", "four", 9)], ["k", "p", "val", "v"]
@@ -468,23 +472,29 @@ def test_partition_moved_keys_flags_contract_violation(spark, tmp_path):
         delta_adapter.partition_moved_keys(spark, path, clean, ["k"], ["p"]).count()
         == 0
     )
-    # violating batch: key 3 moves b -> a while partition a is also touched
+    # violating batch: key 3 moves b -> a; partition b is not touched
     moved = spark.createDataFrame(
         [(1, "a", "upd", 9), (3, "a", "moved", 9)], ["k", "p", "val", "v"]
     )
     flagged = delta_adapter.partition_moved_keys(spark, path, moved, ["k"], ["p"])
     assert [tuple(r) for r in flagged.collect()] == [(3, "a", "b")]
-    # the symptom the assertion prevents (parquet route, old partition
-    # touched): key 3's old-partition row vanishes and the key lands
-    # once under the new partition — pinned so the docstring's claim
-    # stays true against writers changes
-    delta_adapter.merge_upsert_partitioned_auto(
-        spark, path, moved, ["k"], ["p"], order_col="v"
+
+    def merged(path, batch):
+        delta_adapter.merge_upsert_partitioned_auto(
+            spark, path, batch, ["k"], ["p"], order_col="v"
+        )
+        return sorted((r["k"], r["p"]) for r in spark.read.parquet(path).collect())
+
+    # old partition untouched: its row is never read, so key 3 lands twice
+    assert merged(path, moved) == [(1, "a"), (2, "a"), (3, "a"), (3, "b")]
+    # old partition touched too (fresh key 5 in b): the merge reads b and
+    # the moved key's old-partition row vanishes
+    touched = moved.unionByName(
+        spark.createDataFrame([(5, "b", "five", 9)], ["k", "p", "val", "v"])
     )
-    rows = sorted(
-        (r["k"], r["p"]) for r in spark.read.parquet(path).collect()
-    )
-    assert rows == [(1, "a"), (2, "a"), (3, "a")]  # (3, "b") vanished
+    assert merged(table("moved_touched"), touched) == [
+        (1, "a"), (2, "a"), (3, "a"), (5, "b")
+    ]
 
 
 def test_partition_moved_keys_null_safe_keys(spark, tmp_path):

@@ -238,3 +238,43 @@ def test_round4_queries_cartesian_free(spark, sf_dir, entry):
     # the corpus vocabulary reduction is one word-keyed exchange with
     # map-side combine — a single shuffle
     audit.assert_max_shuffles(entry.queries()["text_word_counts"](spark, sf_dir), 1)
+
+
+# Per curation query: (`_gate_barrier` calls, optimized-plan LogicalRDD
+# references, executed-plan Exchange mentions — shuffles and broadcasts,
+# optimized-plan regexp_replace count). The LogicalRDDs are the outermost
+# barrier checkpoints; without one, filter pushdown copies the staged
+# text-scoring trees (regexp_replace) into every consumer — the shape
+# the barriers exist to prevent (see plans/training.py:_gate_barrier).
+# Barriers nested under another one leave no trace in the final plan, so
+# the calls are counted too.
+CURATION_PLAN_SHAPES = {
+    "train_curation": (1, 2, 2, 1),
+    "train_curation_v2": (2, 2, 4, 1),
+    "train_curation_v3": (2, 2, 4, 15),
+    "train_curation_increment": (3, 1, 3, 0),
+    "train_curation_increment_v2": (3, 2, 5, 0),
+}
+
+
+@pytest.mark.parametrize("name", sorted(CURATION_PLAN_SHAPES))
+def test_curation_plan_shape(spark, sf_dir, entry, name, monkeypatch):
+    """Every curation query keeps its barriers and its one copy of the
+    gate chain: a dropped barrier or a gate chain copied back into the
+    plan changes these counts."""
+    from reddit_twitter_big_data_pipeline_spark.plans import training
+
+    calls = []
+    barrier = training._gate_barrier
+    monkeypatch.setattr(
+        training, "_gate_barrier", lambda df: calls.append(1) or barrier(df)
+    )
+    qe = entry.queries()[name](spark, sf_dir)._jdf.queryExecution()
+    optimized = qe.optimizedPlan().toString()
+    got = (
+        len(calls),
+        optimized.count("LogicalRDD"),
+        qe.executedPlan().toString().count("Exchange"),
+        optimized.count("regexp_replace"),
+    )
+    assert got == CURATION_PLAN_SHAPES[name]

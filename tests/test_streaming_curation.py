@@ -279,10 +279,10 @@ def test_curate_stream_v2_screens_and_grows_state(spark, tmp_path):
 
 
 def test_curate_stream_v2_batch_parity_with_increment_v2(spark, tmp_path):
-    """Per-batch streaming admission == curate_increment_v2 of that batch
-    against the previously-admitted corpus (one semantics definition, two
-    cadences). Batch 1 parity uses an empty corpus; batch 2 parity uses
-    batch 1's admitted docs as the corpus."""
+    """Per-batch streaming admission == `training.admit` (near-dup screen
+    on) of that batch against the previously-admitted corpus (one
+    semantics definition, two cadences). Batch 1 parity uses an empty
+    corpus; batch 2 parity uses batch 1's admitted docs as the corpus."""
     from reddit_twitter_big_data_pipeline_spark.plans import training
 
     b1 = [
@@ -318,13 +318,14 @@ def test_curate_stream_v2_batch_parity_with_increment_v2(spark, tmp_path):
         )
 
     empty = spark.createDataFrame([], "doc_id long, text string, url string")
-    adm1 = training.curate_increment_v2(
-        df_of(b1), empty, min_margin=1, q_micro_min=1, domain_cap=2
+    gates = training.web_gates(min_margin=1, q_micro_min=1)
+    adm1 = training.admit(
+        df_of(b1), empty, gates, domain_cap=2, neardup_threshold=0.9
     ).collect()
     adm1_ids = {r.doc_id for r in adm1}
     corpus2 = df_of([d for d in b1 if d["doc_id"] in adm1_ids])
-    adm2 = training.curate_increment_v2(
-        df_of(b2), corpus2, min_margin=1, q_micro_min=1, domain_cap=2
+    adm2 = training.admit(
+        df_of(b2), corpus2, gates, domain_cap=2, neardup_threshold=0.9
     ).collect()
     assert stream_rows.get(0, set()) == {
         (r.doc_id, r.lang, r.domain, r.n_tokens) for r in adm1

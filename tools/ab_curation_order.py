@@ -1,11 +1,12 @@
-"""Interleaved A/B: curate_corpus_v2 stage order — r9 (quota THEN
+"""Interleaved A/B: whole-corpus curation stage order — r9 (quota THEN
 quality) vs r10/ADVICE-r9 (quality THEN quota) — at the 16x salted
 corpus, the scale where tools/bench_curation_scaled.py's linearity
 ratio moved 15.5x (r9) -> ~17x (r10). The reorder is a CORRECTNESS fix
 (a low-quality page must not consume a domain's cap); this A/B
 establishes whether it also moved the wall time or whether the ratio
-drift is ambient. Both arms replay the committed pipeline shape exactly
-(same gates, same dedupe/split tail); only the two middle stages swap.
+drift is ambient. The r10 arm is `training.curate` itself; the r9 arm
+runs the same `web_gates` with the quality gate moved after the quota,
+then the same dedupe/split tail.
 
 Usage: python tools/ab_curation_order.py [sf_dir] [reps] [scale]
 """
@@ -20,7 +21,7 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from pyspark.sql import DataFrame, functions as F  # noqa: E402
+from pyspark.sql import DataFrame  # noqa: E402
 
 from reddit_twitter_big_data_pipeline_spark import session  # noqa: E402
 from reddit_twitter_big_data_pipeline_spark.operators import (  # noqa: E402
@@ -28,35 +29,22 @@ from reddit_twitter_big_data_pipeline_spark.operators import (  # noqa: E402
     sampling,
     text as text_ops,
 )
-from tools.bench_curation_scaled import corpus  # noqa: E402
+from reddit_twitter_big_data_pipeline_spark.parallel import spread  # noqa: E402
+from reddit_twitter_big_data_pipeline_spark.plans import training  # noqa: E402
+from tools.bench_curation_scaled import blocked_domains, corpus  # noqa: E402
 
 
 def pipeline(docs: DataFrame, blocked: DataFrame, quality_first: bool) -> DataFrame:
-    lang_ok = (
-        text_ops.langid_margin(
-            docs.select("doc_id", "text", "url"),
-            min_margin=2,
-            keep=("text", "url"),
-        )
-        .filter(F.col("lang_conf") != "und")
-        .select("doc_id", "text", "url", F.col("lang_conf").alias("lang"))
-    )
-    dom = lang_ok.withColumn("domain", text_ops.registered_domain("url")).join(
-        F.broadcast(blocked.select("domain")), "domain", "left_anti"
-    )
-    qual_pred = (
-        F.floor(text_ops.quality_score("text") * F.lit(1_000_000.0)).cast("long")
-        >= F.lit(150_000)
-    )
+    gates = training.web_gates(blocked, q_micro_min=150_000)
     if quality_first:  # the r10 order
-        staged = sampling.cap_per_group(
-            dom.filter(qual_pred), "domain", 20, id_col="doc_id"
-        )
-    else:  # the r9 order
-        staged = sampling.cap_per_group(dom, "domain", 20, id_col="doc_id").filter(
-            qual_pred
-        )
-    deduped = dedup_ops.exact_dedupe(staged, id_col="doc_id", text_col="text")
+        return training.curate(docs, gates, domain_cap=20)
+    # the r9 order
+    langid, domain, quality = gates
+    c = training._Cols("doc_id", "text", "url")
+    quota = sampling.cap_per_group(
+        training._gated(spread(docs), [langid, domain], c), "domain", 20
+    )
+    deduped = dedup_ops.exact_dedupe(quality(quota, c))
     return deduped.select(
         "doc_id",
         "lang",
@@ -72,11 +60,7 @@ def main() -> None:
     scale = int(sys.argv[3]) if len(sys.argv) > 3 else 16
     spark = session.get_spark(cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
     docs = corpus(spark, sf_dir, scale)
-    blocked = spark.range(0, 20 * scale, 5).select(
-        F.concat(F.lit("site"), F.col("id").cast("string"), F.lit(".com")).alias(
-            "domain"
-        )
-    )
+    blocked = blocked_domains(spark, scale)
     # warm both arms
     for qf in (False, True):
         pipeline(docs, blocked, qf).write.format("noop").mode("overwrite").save()

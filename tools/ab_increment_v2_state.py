@@ -1,4 +1,4 @@
-"""Interleaved A/B: curate_increment_v2's near-dup probe with the
+"""Interleaved A/B: near-dup-screened admission's MinHash probe with the
 corpus state DERIVED per admission (the gated-query shape — corpus
 shingles/signatures/bands rebuilt each run) vs the PRODUCTION shape
 (minhash_corpus_state prebuilt once and reused — what a standing
@@ -73,9 +73,9 @@ def main() -> None:
     print(f"state build (once, at ingest): {build_s}s", file=sys.stderr, flush=True)
 
     def run(with_state: bool):
-        out = training.curate_increment_v2(
-            batch, corpus, domain_cap=20,
-            corpus_state=state if with_state else None,
+        out = training.admit(
+            batch, corpus, training.web_gates(), domain_cap=20,
+            neardup_threshold=0.9, corpus_state=state if with_state else None,
         )
         out.write.format("noop").mode("overwrite").save()
 

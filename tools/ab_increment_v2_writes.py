@@ -48,7 +48,11 @@ from reddit_twitter_big_data_pipeline_spark.operators import dedup as dedup_ops 
 from reddit_twitter_big_data_pipeline_spark.operators import text as text_ops  # noqa: E402
 from reddit_twitter_big_data_pipeline_spark.plans.training import (  # noqa: E402
     _admit_by_quota,
-    _increment_gated_novel,
+    _Cols,
+    _drop_near_dups,
+    _gated,
+    _novel,
+    web_gates,
 )
 from reddit_twitter_big_data_pipeline_spark.sinks.writers import (  # noqa: E402
     overwrite_partitions,
@@ -59,6 +63,7 @@ from reddit_twitter_big_data_pipeline_spark.streaming.curation import (  # noqa:
 
 NUM_PERM, K, BANDS = 64, 3, 16
 CAP, QMIN, MARGIN, THRESH = 20, 150_000, 2, 0.9
+COLS = _Cols("doc_id", "text", "url")
 
 
 def _admit_arm(spark, batch, state_dir: str, scratch: str, fused: bool) -> None:
@@ -83,31 +88,22 @@ def _admit_arm(spark, batch, state_dir: str, scratch: str, fused: bool) -> None:
         .groupBy("domain")
         .agg(F.sum("n").alias("__have"))
     )
-    novel = _increment_gated_novel(
-        batch, None, None, "doc_id", "text", "url", "domain",
-        MARGIN, QMIN, corpus_fps=fps,
-    ).persist()
-    pairs = dedup_ops.minhash_incremental_pairs(
-        novel.select("doc_id", "text"), None, id_col="doc_id", text_col="text",
-        num_perm=NUM_PERM, k=K, bands=BANDS, threshold=THRESH,
-        corpus_state=(ex_old, b_old),
+    gated = _gated(batch.select(*COLS), web_gates(None, MARGIN, QMIN), COLS)
+    novel = _novel(gated, fps, COLS).persist()
+    screened = _drop_near_dups(
+        novel, None, COLS, THRESH, NUM_PERM, K, BANDS, (ex_old, b_old)
     )
-    losers = pairs.select(F.col("b").alias("doc_id")).distinct()
-    screened = novel.join(losers, "doc_id", "left_anti")
     caches = [novel]
     if fused:
         adm_full = _admit_by_quota(
-            screened, None, "doc_id", "text", "url", CAP, "xxhash64",
-            have=have, keep_cols=("text",),
+            screened, have, CAP, "xxhash64", COLS, keep_cols=("text",)
         ).persist()
         admitted = adm_full.drop("text")
         adm_docs = adm_full
         caches.append(adm_full)
     else:
         screened = screened.persist()
-        admitted = _admit_by_quota(
-            screened, None, "doc_id", "text", "url", CAP, "xxhash64", have=have,
-        ).persist()
+        admitted = _admit_by_quota(screened, have, CAP, "xxhash64", COLS).persist()
         adm_docs = screened.join(admitted.select("doc_id"), "doc_id").persist()
         caches += [screened, admitted, adm_docs]
 

@@ -1,6 +1,7 @@
 """Scaled bench for the composed curation pipelines.
 
-Mode `v2` (r9, `plans/training.py:curate_corpus_v2`): the 100-TB claim
+Mode `v2` (r9, `plans/training.py:curate` with `web_gates` and a
+domain cap): the 100-TB claim
 is that the pipeline is scan-dominated with exactly three slim-keyed
 exchanges (domain-quota window, dedupe fingerprint window, final
 stage), so wall time grows AT MOST linearly with corpus size — no stage
@@ -25,7 +26,7 @@ If the linear story is true, t(16x)/t(1x) <= 16 with room to spare
 a stage degrades superlinearly and the plan needs work.
 
 Mode `increment` (r10, VERDICT r9 item 2 —
-`plans/training.py:curate_increment`): the operator's THESIS is that
+`plans/training.py:admit`): the operator's THESIS is that
 admitting a FIXED batch costs ~the batch, not the corpus: the corpus
 contributes only map-side-reduced fingerprints and (domain, count)
 rows, never a full shuffle. Method: the same 1x/4x/16x salted corpus
@@ -39,7 +40,7 @@ does grow with the corpus, but it is the cheap map-side path; the
 batch-side windows and joins dominate).
 
 Mode `increment_v2` (r14, VERDICT r13 item 3): the near-dup-screened
-admission (`curate_increment_v2`) under the same fixed-batch / scaled-
+admission (`admit` with `neardup_threshold`) under the same fixed-batch / scaled-
 corpus method — its 5k-doc suite row is stage-overhead-bound, so the
 round-over-round comparison belongs on this data-cost-dominated cell.
 
@@ -143,11 +144,11 @@ def fixed_batch(spark, sf_dir: str) -> DataFrame:
     )
 
 
-# The study's gate constants, shared with bench.py's scaled headline row
-# (train_curation_v2_16x) so the headline row measures EXACTLY this
+# The study's gate constants, shared with bench.py's scaled headline rows
+# (train_curation*_16x) so the headline rows measure EXACTLY this
 # study's workload — a drift here would silently change both together,
 # never one without the other.
-V2_PARAMS = {"domain_cap": 20, "q_micro_min": 150_000}
+DOMAIN_CAP, Q_MICRO_MIN = 20, 150_000
 
 
 def blocked_domains(spark, scale: int) -> DataFrame:
@@ -159,30 +160,39 @@ def blocked_domains(spark, scale: int) -> DataFrame:
     )
 
 
-def build_v2(spark, sf_dir: str, scale: int) -> DataFrame:
-    """One curate_corpus_v2 plan over the `scale`× replicated corpus with
-    the study's blocklist and gate constants (bench.py's headline row)."""
-    return training.curate_corpus_v2(
-        corpus(spark, sf_dir, scale), blocked_domains(spark, scale), **V2_PARAMS
+def plan(mode: str, docs: DataFrame, blocked: DataFrame, batch) -> DataFrame:
+    """One study plan with the study's gate constants: `v2` curates the
+    corpus `docs` against the `blocked` list; `increment` admits `batch`
+    against it, and `increment_v2` adds the near-dup screen (batch ids,
+    +50M, sit above every corpus id, max 16·OFF + |docs|, per the
+    screen's contract)."""
+    if mode == "v2":
+        return training.curate(
+            docs, training.web_gates(blocked, q_micro_min=Q_MICRO_MIN),
+            domain_cap=DOMAIN_CAP,
+        )
+    return training.admit(
+        batch, docs, training.web_gates(q_micro_min=Q_MICRO_MIN),
+        domain_cap=DOMAIN_CAP,
+        neardup_threshold=0.9 if mode == "increment_v2" else None,
     )
+
+
+def build_v2(spark, sf_dir: str, scale: int) -> DataFrame:
+    """The `v2` plan over the `scale`× replicated corpus (bench.py's
+    scaled rows share these builders with the scaling study)."""
+    return plan("v2", corpus(spark, sf_dir, scale), blocked_domains(spark, scale), None)
 
 
 def build_increment(spark, sf_dir: str, scale: int) -> DataFrame:
-    """One curate_increment plan: the FIXED batch admitted against the
-    `scale`× replicated corpus (bench.py's scaled row shares this builder
-    with the scaling study — same no-drift contract as build_v2)."""
-    return training.curate_increment(
-        fixed_batch(spark, sf_dir), corpus(spark, sf_dir, scale), **V2_PARAMS
-    )
+    """The FIXED batch admitted against the `scale`× replicated corpus."""
+    return plan("increment", corpus(spark, sf_dir, scale), None, fixed_batch(spark, sf_dir))
 
 
 def build_increment_v2(spark, sf_dir: str, scale: int) -> DataFrame:
-    """One curate_increment_v2 plan (the near-dup-screened admission):
-    same fixed batch / scaled corpus as build_increment, with the
-    incremental MinHash probe composed in. Batch ids (+50M) sit above
-    every corpus id (max 16·OFF + |docs|), per the operator's contract."""
-    return training.curate_increment_v2(
-        fixed_batch(spark, sf_dir), corpus(spark, sf_dir, scale), **V2_PARAMS
+    """`build_increment` with the near-dup screen."""
+    return plan(
+        "increment_v2", corpus(spark, sf_dir, scale), None, fixed_batch(spark, sf_dir)
     )
 
 
@@ -199,11 +209,7 @@ def bench_mode(spark, sf_dir: str, reps: int, mode: str) -> None:
     )
 
     def build(s: int) -> DataFrame:
-        if mode == "increment":
-            return training.curate_increment(batch, frames[s], **V2_PARAMS)
-        if mode == "increment_v2":
-            return training.curate_increment_v2(batch, frames[s], **V2_PARAMS)
-        return training.curate_corpus_v2(frames[s], blocked[s], **V2_PARAMS)
+        return plan(mode, frames[s], blocked[s], batch)
 
     # warm every scale once (JIT, page cache), record output rows
     for s in SCALES:
