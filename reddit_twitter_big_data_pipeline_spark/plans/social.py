@@ -16,6 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .. import checkpointing
 from ..functions import enrich
 from ..operators import cleanse
 from . import graph
@@ -70,6 +71,11 @@ def twitter_pipeline(
     cleanse: sentinel scrub (F3) → length guard (F5) → blocklist (F6) →
     mentions parse (T1) — then enrich (U1-U3 pandas_udfs) — then graph model
     (K5/K6 as distinct + explode). Returns (nodes, edges).
+
+    The graph reads the cleansed tweets in seven branches, and a commit
+    runs several actions over each output, so the tweets are staged
+    (`checkpointing.stage`) before the graph: the scan and the enrichment
+    run once per commit, not once per branch and action.
     """
     df = cleanse.scrub_sentinels(tweets_raw)
     df = cleanse.filter_length(df, ["content"], 1000)
@@ -78,7 +84,7 @@ def twitter_pipeline(
     df = cleanse.parse_mentions(df)
     if enrichment:
         df = enrich.enrich(df)
-    return graph.twitter_graph(df)
+    return graph.twitter_graph(checkpointing.stage(df))
 
 
 def reddit_pipeline(
@@ -92,6 +98,8 @@ def reddit_pipeline(
     Unlike the reference, comments are scrubbed/enriched with their OWN
     values (the reference leaks the last post's enrichment into every
     comment — reference: glue/reddit_glue.py:122-124, documented bug).
+    Posts and comments are each staged before the graph's branches, as in
+    `twitter_pipeline`.
     """
 
     def _cleanse(df: DataFrame) -> DataFrame:
@@ -108,4 +116,4 @@ def reddit_pipeline(
     if enrichment:
         posts = enrich.enrich(posts)
         comments = enrich.enrich(comments)
-    return graph.reddit_graph(posts, comments)
+    return graph.reddit_graph(checkpointing.stage(posts), checkpointing.stage(comments))

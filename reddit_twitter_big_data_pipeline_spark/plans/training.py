@@ -13,7 +13,7 @@ The registered `train_curation*` queries and `streaming/curation.py`'s
 pipelines are configurations of these pieces, so the langid → blocklist
 → quality chain, the output tails and the barrier placement each have
 one definition. Everything stays ONE lazy DataFrame so Catalyst plans
-the whole pipeline together; the only cuts are the `_gate_barrier`s.
+the whole pipeline together; the only cuts are the staging barriers.
 
 This is the composition story the reference's per-job Glue scripts lack
 (each stage there is a separate job landing to S3 — reference:
@@ -30,6 +30,7 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
+from .. import checkpointing
 from ..operators import dedup as dedup_ops, sampling, text as text_ops
 from ..parallel import spread as _spread
 
@@ -50,35 +51,19 @@ Gate = Callable[[DataFrame, _Cols], DataFrame]
 _LABELS = ("lang", "domain")
 
 
-def _gate_barrier(df: DataFrame) -> DataFrame:
-    """The curation stack's one barrier rule: a lazy localCheckpoint right
-    after each gate that evaluates the staged token machinery — the
-    scrub projection, the scored langid projection and the quality
-    filter — and once more over admission's novel rows, which feed
-    several consumers.
-
-    Why: Catalyst pushes a filter through a projection by SUBSTITUTING
-    the projected expressions into the condition, and every extra
-    reference of a subtree (an anti-join side, a window, a quota join)
-    repeats it, so without the cut the text scoring re-runs per
-    reference. The barrier makes downstream stages read materialized
-    attributes: one copy of the machinery, one pass over the text
-    (BASELINE.md r10: the v3 barrier measured 0.56× of the barrier-less
-    plan, rows identical). The `repetition` gate has none: its fold is
-    still substituted into its filter. `tests/test_plans.py` pins each
-    curation query's barrier count and plan shape.
-
-    Fault-tolerance trade-off: localCheckpoint keeps UNREPLICATED
-    executor-local blocks and cuts the lineage that would rebuild them,
-    so losing an executor that holds one (spot reclaim, dynamic-
-    allocation scale-down, OOM kill) fails the job instead of
-    recomputing; the blocks also take executor disk. Deployments with
-    executor churn should swap this for a reliable `df.checkpoint()` to
-    cluster storage — here, in one place.
-
-    No-op on streaming frames: micro-batch plans are rebuilt per batch,
-    and a checkpoint there is a plan-build-time AnalysisException."""
-    return df if df.isStreaming else df.localCheckpoint(eager=False)
+# Barrier placement: the curation stack stages (`checkpointing.stage`,
+# which states the rule and its fault-tolerance trade-off) right after each
+# gate that evaluates the staged token machinery — the scrub projection,
+# the scored langid projection and the quality filter — and once more over
+# admission's novel rows, which feed several consumers. Catalyst pushes a
+# filter through a projection by SUBSTITUTING the projected expressions
+# into the condition, and every extra reference of a subtree (an anti-join
+# side, a window, a quota join) repeats it, so without the cut the text
+# scoring re-runs per reference (BASELINE.md r10: the v3 barrier measured
+# 0.56x of the barrier-less plan, rows identical). The `repetition` gate
+# has none: its fold is still substituted into its filter.
+# `tests/test_plans.py` pins each curation query's barrier count and plan
+# shape.
 
 
 def _gated(df: DataFrame, gates: list[Gate], c: _Cols) -> DataFrame:
@@ -100,7 +85,7 @@ def scrub() -> Gate:
     boilerplate are duplicates."""
 
     def gate(df: DataFrame, c: _Cols) -> DataFrame:
-        return _gate_barrier(text_ops.clean_for_training(df, col=c.text))
+        return checkpointing.stage(text_ops.clean_for_training(df, col=c.text))
 
     return gate
 
@@ -140,7 +125,7 @@ def web_gates(
     never consume a domain's cap."""
 
     def langid(df: DataFrame, c: _Cols) -> DataFrame:
-        scored = _gate_barrier(
+        scored = checkpointing.stage(
             text_ops.langid_margin(
                 df, col=c.text, id_col=c.id, min_margin=min_margin,
                 keep=_keep_but(df, c),
@@ -161,7 +146,7 @@ def web_gates(
         )
 
     def quality(df: DataFrame, c: _Cols) -> DataFrame:
-        return _gate_barrier(
+        return checkpointing.stage(
             df.filter(
                 F.floor(text_ops.quality_score(c.text) * F.lit(1_000_000.0)).cast("long")
                 >= F.lit(q_micro_min)
@@ -296,7 +281,7 @@ def admit(
     0.9 the 64-perm/16-band LSH candidate recall is ≈ 1, so an
     exact-Jaccard oracle gates the whole composition."""
     c = _Cols(id_col, text_col, url_col)
-    novel = _gate_barrier(
+    novel = checkpointing.stage(
         _novel(
             _gated(batch, gates, c),
             corpus.select(text_ops.fingerprint(text_col).alias("__fp")).distinct(),

@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
+from .. import checkpointing
+
 
 def write_partitioned_json(df: DataFrame, root: str, partition_cols=("topic", "dataload")) -> None:
     """K1: append JSON under topic=…/dataload=… (reference:
@@ -294,7 +296,11 @@ def _merge_partition_scoped(
     hand (base_slice | None, updates) to `combine`, stage its result, and
     swap each touched partition dir in via two renames (displaced originals
     parked under `<target>.__pbackup__`, outside the table root). Untouched
-    partitions are never read, rewritten, or moved."""
+    partitions are never read, rewritten, or moved.
+
+    No rows means no commit: an existing table is left as it is, and with
+    no table yet nothing is left on disk and the empty `combine` result is
+    returned."""
     jvm = spark._jvm
     recover_partition_swaps(spark, target_path, len(partition_cols))
     fs, tgt = _hadoop_fs(spark, target_path)
@@ -302,10 +308,16 @@ def _merge_partition_scoped(
     if not fs.exists(tgt):
         first = combine(None, updates)
         first.write.mode("overwrite").partitionBy(*partition_cols).parquet(target_path)
+        if not _list_partition_dirs(fs, jvm, tgt, len(partition_cols)):
+            fs.delete(tgt, True)
+            return first
         return spark.read.parquet(target_path)
 
     # 1. the touched partition values — bounded by contract (one update
-    #    batch touches few partitions; this is the whole point of the op)
+    #    batch touches few partitions; this is the whole point of the op).
+    #    The collect and the staged write both read `updates`: stage it so
+    #    its plan runs once.
+    updates = checkpointing.stage(updates)
     touched = [r.asDict() for r in updates.select(*partition_cols).distinct().collect()]
     if not touched:
         return spark.read.parquet(target_path)
@@ -546,6 +558,11 @@ def merge_upsert_manifested(
          manifest N-1 have had a full commit cycle to finish), then drop
          manifests older than N.
     A crash anywhere before step 2 leaves the table exactly at snapshot N.
+
+    `updates` is evaluated once per commit: when the table exists, the
+    touched-partition collect and the staged write both read it, so it is
+    staged (`checkpointing.stage`) first. No rows means no commit and no
+    manifest; with no table yet the (empty) updates are returned.
     """
     jvm = spark._jvm
     fs, _ = _hadoop_fs(spark, target_path)
@@ -573,6 +590,7 @@ def merge_upsert_manifested(
     new_ver = cur_ver + 1
 
     if cur_parts:
+        updates = checkpointing.stage(updates)
         touched = [
             r.asDict() for r in updates.select(*partition_cols).distinct().collect()
         ]
@@ -607,8 +625,12 @@ def merge_upsert_manifested(
     staging = f"{target_path}.__mstaging__{data_ver}"
     result.write.mode("overwrite").partitionBy(*partition_cols).parquet(staging)
     sroot = jvm.org.apache.hadoop.fs.Path(staging)
+    staged = _list_partition_dirs(fs, jvm, sroot, len(partition_cols))
+    if not staged:  # no rows on a first commit (a later one returned above)
+        fs.delete(sroot, True)
+        return updates
     new_parts = dict(cur_parts)
-    for rel in _list_partition_dirs(fs, jvm, sroot, len(partition_cols)):
+    for rel in staged:
         sdir = jvm.org.apache.hadoop.fs.Path(staging + "/" + rel)
         vdir = jvm.org.apache.hadoop.fs.Path(
             f"{target_path}/{rel}/{_VERSION_KEY}={data_ver}"

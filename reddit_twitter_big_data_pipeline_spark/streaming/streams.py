@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
+from .. import checkpointing
 from ..sinks import delta_adapter, writers
 
 
@@ -337,8 +338,7 @@ def upsert_stream_manifested(
     is idempotent under replay)."""
 
     def _merge(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
+        # the merge reads the batch once and commits nothing for an empty one
         writers.merge_upsert_manifested_retrying(
             batch.sparkSession,
             target_path,
@@ -544,16 +544,13 @@ def graph_stream(
 
     def _serve(batch: DataFrame, batch_id: int) -> None:
         # twitter_graph references the batch across ~7 union branches and the
-        # sink runs two actions — pin it once or every branch re-reads the
+        # sink runs two actions — stage it once or every branch re-reads the
         # micro-batch's source files
-        batch = batch.persist()
-        try:
-            if batch.isEmpty():
-                return
-            nodes, edges = twitter_graph(batch)
-            write_graph(nodes, edges, transport_factory)
-        finally:
-            batch.unpersist()
+        batch = checkpointing.stage(batch)
+        if batch.isEmpty():
+            return
+        nodes, edges = twitter_graph(batch)
+        write_graph(nodes, edges, transport_factory)
 
     writer = tweets.writeStream.foreachBatch(_serve).option(
         "checkpointLocation", checkpoint

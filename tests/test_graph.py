@@ -3,8 +3,15 @@ fixture rows shaped like the reference dumps (SURVEY §5 plan #3)."""
 
 from __future__ import annotations
 
+import glob
+import json
+import os
+
+from reddit_twitter_big_data_pipeline_spark import schemas
 from reddit_twitter_big_data_pipeline_spark.operators import cleanse
 from reddit_twitter_big_data_pipeline_spark.plans import graph, social
+from reddit_twitter_big_data_pipeline_spark.sinks import writers
+from reddit_twitter_big_data_pipeline_spark.sources import readers
 
 TWEETS = [
     # id, date, content, username, followers, mentionedUsers, rt, reply, inReplyTo, ts
@@ -103,3 +110,83 @@ def test_idempotent_rerun_same_graph(spark):
         enrichment=False,
     )
     assert sorted(map(tuple, edges_twice.collect())) == sorted(map(tuple, edges_once.collect()))
+
+
+def _next_execution_id(spark) -> int:
+    """Id of the next SQL execution. The status store keeps only the
+    newest executions, so their count is not an id."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList().iterator()
+    last = -1
+    while execs.hasNext():
+        last = max(last, execs.next().executionId())
+    return last + 1
+
+
+def _files_read_since(spark, first_execution: int) -> int:
+    """Files opened by every file-source scan of the SQL executions from
+    `first_execution` on: the sum of the scans' "number of files read"
+    metric in the SQL status store. A scan node posts it each time a plan
+    containing it executes, so a branch or action that re-reads the source
+    counts its files again."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    total, execs = 0, store.executionsList().iterator()
+    while execs.hasNext():
+        e = execs.next()
+        if e.executionId() < first_execution:
+            continue
+        ids, metrics = set(), e.metrics().iterator()
+        while metrics.hasNext():
+            m = metrics.next()
+            if m.name() == "number of files read":
+                ids.add(m.accumulatorId())
+        values = store.executionMetrics(e.executionId()).iterator()
+        while values.hasNext():
+            kv = values.next()
+            if kv._1() in ids:
+                total += int(kv._2().replace(",", ""))
+    return total
+
+
+def _live_table_files(spark, target: str) -> int:
+    """Parquet files of the current snapshot of a manifested table."""
+    fs, _ = writers._hadoop_fs(spark, target)
+    versions = writers._manifest_versions(fs, spark._jvm, target)
+    if not versions:
+        return 0
+    parts = writers._read_manifest(fs, spark._jvm, target, versions[-1])
+    return sum(
+        len(glob.glob(f"{target}/{rel}/{writers._VERSION_KEY}={v}/*.parquet"))
+        for rel, v in parts.items()
+    )
+
+
+def test_daily_commit_reads_each_source_file_once(spark, tmp_path):
+    """The daily job — scan, cleanse, enrich, graph, one manifested merge
+    per table — opens each source file once per commit, however many graph
+    branches and merge actions read the tweets; a re-run also opens each
+    live file of the standing tables once."""
+    root = str(tmp_path / "tweets")
+    rows = TWEETS * 2
+    n_files = len(rows)  # one tweet per file, over two topic partitions
+    for i, row in enumerate(rows):
+        d = f"{root}/topic=t{i % 2}/dataload=d1"
+        os.makedirs(d, exist_ok=True)
+        with open(f"{d}/part-{i}.json", "w") as f:
+            json.dump([dict(zip(TWEET_COLS, row), id=row[0] + 10 * i)], f)
+    nodes_t, edges_t = str(tmp_path / "nodes"), str(tmp_path / "edges")
+    for _commit in range(2):
+        expected = n_files + _live_table_files(spark, nodes_t) + _live_table_files(
+            spark, edges_t
+        )
+        first = _next_execution_id(spark)
+        tweets = readers.read_partitioned_json(spark, root, schemas.TWEETS, dataload="d1")
+        nodes, edges = social.twitter_pipeline(tweets)
+        writers.merge_upsert_manifested(spark, nodes_t, nodes, ["node_id", "label"], ["label"])
+        writers.merge_upsert_manifested(
+            spark, edges_t, edges, ["src", "dst", "rel_type"], ["rel_type"]
+        )
+        assert _files_read_since(spark, first) == expected
+    got = writers.read_manifested(spark, edges_t)
+    assert got.filter("rel_type = 'POSTED_BY'").count() == 4  # 4 of 6 tweets kept

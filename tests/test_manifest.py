@@ -60,6 +60,60 @@ def test_manifested_merge_semantics(spark, tmp_path):
     assert set(got.columns) == {"topic", "id", "score"}
 
 
+def test_manifested_merge_evaluates_updates_once(spark, tmp_path):
+    """The merge reads `updates` once per commit: the touched-partition
+    collect and the staged write share one evaluation of its plan."""
+    target = str(tmp_path / "tbl")
+    writers.merge_upsert_manifested(
+        spark, target, _mk(spark, [("a", 1, 10), ("b", 2, 20)]), ["id"], ["topic"]
+    )
+    evals = spark.sparkContext.accumulator(0)
+
+    def topic(t):
+        evals.add(1)
+        return t
+
+    upd = _mk(spark, [("a", 1, 11), ("a", 3, 30), ("c", 4, 40)]).withColumn(
+        "topic", F.udf(topic, "string")("topic")
+    )
+    writers.merge_upsert_manifested(spark, target, upd, ["id"], ["topic"])
+    assert evals.value == 3
+    assert _rows(writers.read_manifested(spark, target)) == [
+        ("a", 1, 11),
+        ("a", 3, 30),
+        ("b", 2, 20),
+        ("c", 4, 40),
+    ]
+
+
+def test_empty_updates_commit_nothing(spark, tmp_path):
+    """No rows means no commit: on a fresh target nothing is written (no
+    manifest, no table dir) and the empty updates come back; on an existing
+    table no manifest is published and the snapshot is unchanged. The same
+    holds for the two-rename partitioned merge."""
+    empty = _mk(spark, [])
+    target = str(tmp_path / "tbl")
+    out = writers.merge_upsert_manifested(spark, target, empty, ["id"], ["topic"])
+    assert out.count() == 0 and set(out.columns) == {"topic", "id", "score"}
+    assert not (tmp_path / "tbl").exists()
+
+    writers.merge_upsert_manifested(
+        spark, target, _mk(spark, [("a", 1, 10)]), ["id"], ["topic"]
+    )
+    fs, _ = writers._hadoop_fs(spark, target)
+    before = writers._manifest_versions(fs, spark._jvm, target)
+    out = writers.merge_upsert_manifested(spark, target, empty, ["id"], ["topic"])
+    assert writers._manifest_versions(fs, spark._jvm, target) == before == [1]
+    assert _rows(out) == [("a", 1, 10)]
+
+    ptarget = str(tmp_path / "ptbl")
+    out = writers.merge_upsert_partitioned(spark, ptarget, empty, ["id"], ["topic"])
+    assert out.count() == 0 and not (tmp_path / "ptbl").exists()
+    writers.merge_upsert_partitioned(spark, ptarget, _mk(spark, [("a", 1, 10)]), ["id"], ["topic"])
+    out = writers.merge_upsert_partitioned(spark, ptarget, empty, ["id"], ["topic"])
+    assert _rows(out) == [("a", 1, 10)]
+
+
 def test_manifested_reader_never_sees_partial_snapshot(spark, tmp_path):
     """A reader polling during a stream of commits must only ever observe
     one of the committed snapshots — never a missing partition or a

@@ -240,12 +240,13 @@ def test_round4_queries_cartesian_free(spark, sf_dir, entry):
     audit.assert_max_shuffles(entry.queries()["text_word_counts"](spark, sf_dir), 1)
 
 
-# Per curation query: (`_gate_barrier` calls, optimized-plan LogicalRDD
+# Per curation query: (`checkpointing.stage` calls, optimized-plan LogicalRDD
 # references, executed-plan Exchange mentions — shuffles and broadcasts,
 # optimized-plan regexp_replace count). The LogicalRDDs are the outermost
 # barrier checkpoints; without one, filter pushdown copies the staged
 # text-scoring trees (regexp_replace) into every consumer — the shape
-# the barriers exist to prevent (see plans/training.py:_gate_barrier).
+# the barriers exist to prevent (see the barrier placement note in
+# plans/training.py).
 # Barriers nested under another one leave no trace in the final plan, so
 # the calls are counted too.
 CURATION_PLAN_SHAPES = {
@@ -262,12 +263,12 @@ def test_curation_plan_shape(spark, sf_dir, entry, name, monkeypatch):
     """Every curation query keeps its barriers and its one copy of the
     gate chain: a dropped barrier or a gate chain copied back into the
     plan changes these counts."""
-    from reddit_twitter_big_data_pipeline_spark.plans import training
+    from reddit_twitter_big_data_pipeline_spark import checkpointing
 
     calls = []
-    barrier = training._gate_barrier
+    barrier = checkpointing.stage
     monkeypatch.setattr(
-        training, "_gate_barrier", lambda df: calls.append(1) or barrier(df)
+        checkpointing, "stage", lambda df: calls.append(1) or barrier(df)
     )
     qe = entry.queries()[name](spark, sf_dir)._jdf.queryExecution()
     optimized = qe.optimizedPlan().toString()

@@ -69,15 +69,15 @@ def main() -> int:
     )
 
     import __spark_entry__ as E
-    from pyspark.sql import SparkSession
+    from reddit_twitter_big_data_pipeline_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]")
-        .appName("check")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "8g")
-        .getOrCreate()
+    # the engine's own session settings, so plan-sensitive queries grade as
+    # the engine runs them; 8 shuffle partitions and an 8 GB heap as before
+    spark = get_spark(
+        "check",
+        cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "8")),
+        shuffle_partitions=8,
+        extra_conf={"spark.driver.memory": "8g"},
     )
     spark.sparkContext.setLogLevel("ERROR")
 
