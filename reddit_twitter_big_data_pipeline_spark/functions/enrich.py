@@ -24,7 +24,6 @@ elementwise, so results ride with their rows by construction.
 from __future__ import annotations
 
 import hashlib
-import json
 import uuid
 from typing import Callable
 

@@ -137,19 +137,9 @@ def explode_mentions(df: DataFrame, id_col: str = "id", col: str = "mentionedUse
     )
 
 
-# T3 — timestamp normalize/parse (reference: glue/twitter_glue.py:79,
-# reddit/lambda_function.py:48).
+# T3 — partition label (reference: glue/reddit_glue.py:60).
 
-TS_FMT = "yyyy-MM-dd HH:mm:ss"
 DATALOAD_FMT = "dd-MM-yyyy"
-
-
-def parse_event_time(col: str, fmt: str = TS_FMT) -> Column:
-    return F.to_timestamp(F.col(col), fmt)
-
-
-def epoch_to_ts(col: str) -> Column:
-    return F.from_unixtime(F.col(col)).cast("timestamp")
 
 
 def dataload_label(ts: Column) -> Column:
@@ -168,10 +158,6 @@ def cast_cols(df: DataFrame, casts: dict[str, str]) -> DataFrame:
 
 
 # T5 — date arithmetic (reference: glue/twitter_glue.py:52).
-
-
-def days_ago(n: int) -> Column:
-    return F.date_sub(F.current_date(), n)
 
 
 def trunc_minute(col: str) -> Column:

@@ -1277,10 +1277,10 @@ def boilerplate_ngrams(
 ) -> DataFrame:
     """Per-document boilerplate signal from CORPUS-WIDE k-gram document
     frequency — the cross-document counterpart of the within-document
-    `text.ngram_dup_fraction`: headers, footers, licence blocks, and
-    templated spans show up as k-grams shared by ≥ `min_docs` documents
-    (C4 removed repeated 3-sentence spans this way, Dolma/RefinedWeb use
-    document-frequency n-gram filters). Returns
+    `dup_2gram_frac`/`dup_3gram_frac` of `text.quality_signals`: headers,
+    footers, licence blocks, and templated spans show up as k-grams shared
+    by ≥ `min_docs` documents (C4 removed repeated 3-sentence spans this
+    way, Dolma/RefinedWeb use document-frequency n-gram filters). Returns
     (id, n_grams, n_shared, shared_frac) where n_grams counts the doc's
     DISTINCT k-grams and n_shared those whose corpus doc-frequency is
     ≥ min_docs; shared_frac = n_shared/n_grams (one long/long division).

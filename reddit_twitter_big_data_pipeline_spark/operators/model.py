@@ -55,16 +55,6 @@ def strip_thing_prefix(col) -> F.Column:
     return F.regexp_replace(col, "^t[0-9]_", "")
 
 
-def parent_join(comments: DataFrame) -> DataFrame:
-    """A4 (one hop): attach each comment's parent comment id, null for
-    top-level (parent is the post). Self-join on the stripped parent_id."""
-    c = comments.alias("c")
-    p = comments.select(F.col("id").alias("p_id")).alias("p")
-    return c.join(
-        p, strip_thing_prefix(F.col("c.parent_id")) == F.col("p.p_id"), "left"
-    ).select("c.*", F.col("p.p_id").alias("parent_comment_id"))
-
-
 def comment_depth(
     comments: DataFrame, max_depth: int = 32, checkpoint_dir: str | None = None
 ) -> DataFrame:

@@ -1255,26 +1255,11 @@ def gopher_keep(
 
 
 def _gram_array(toks: Column, n_tokens: Column, n: int) -> Column:
-    """Array of the doc's n-grams (shared by ``ngram_dup_fraction`` and the
-    staged ``quality_signals`` — one definition of the gram construction)."""
+    """Array of the doc's n-grams (one definition of the gram construction,
+    shared by the repetition fold and the staged ``quality_signals``)."""
     return F.transform(
         F.sequence(F.lit(0), F.greatest(n_tokens - n, F.lit(0))),
         lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
-    )
-
-
-def ngram_dup_fraction(col: str = "text", n: int = 2) -> Column:
-    """Fraction of n-gram occurrences that repeat an earlier occurrence —
-    Gopher's duplicate-n-gram repetition signal (Rae et al. 2021 §A1.2;
-    their thresholds: drop if dup-2-gram frac > 0.2 … dup-4-gram > 0.16).
-    Computed as 1 − distinct/total over the doc's own n-grams: a pure array
-    expression per row, no explode, no shuffle — the repetition check runs
-    at scan speed even at 100 TB. Docs shorter than n tokens yield one
-    whole-text gram (fraction 0)."""
-    toks = tokens(col)
-    grams = _gram_array(toks, F.size(toks), n)
-    return F.round(
-        F.lit(1.0) - F.size(F.array_distinct(grams)) / F.size(grams), 6
     )
 
 

@@ -63,42 +63,6 @@ REDDIT_COMMENTS = T.StructType(
     ]
 )
 
-# Partition columns appear on every social table when read from a
-# topic=<t>/dataload=<dd-MM-yyyy> layout (reference: twitter/lambda_function.py:26).
-PARTITION_COLS = ("topic", "dataload")
-
-# --- enrichment output columns (appended by functions.enrich) -------------
-
-SENTIMENT_COLS = ("Positive", "Negative", "Neutral", "Mixed")
-
-# --- graph model output tables (plans.graph) ------------------------------
-
-NODES = T.StructType(
-    [
-        T.StructField("node_id", T.StringType(), False),
-        T.StructField("label", T.StringType(), False),
-        T.StructField("props", T.MapType(T.StringType(), T.StringType()), True),
-    ]
-)
-
-EDGES = T.StructType(
-    [
-        T.StructField("src", T.StringType(), False),
-        T.StructField("dst", T.StringType(), False),
-        T.StructField("rel_type", T.StringType(), False),
-    ]
-)
-
-NODE_LABELS = (
-    "Post_Reddit",
-    "Comment_Reddit",
-    "User_Reddit",
-    "Subreddit_Reddit",
-    "Tweet",
-    "User_Twitter",
-)
-EDGE_TYPES = ("POSTED_IN", "POSTED_BY", "COMMENTED_ON", "COMMENTED_BY", "MENTIONS")
-
 # --- multimodal media table (operators.multimodal) ------------------------
 
 MEDIA = T.StructType(
@@ -123,19 +87,6 @@ MEDIA = T.StructType(
 )
 
 # --- driver synthetic tables (TESTDATA.md) --------------------------------
-
-TESTDATA_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
 
 # Some driver parquet timestamp columns are TIMESTAMP(NANOS) (events.ts),
 # which Spark's parquet reader rejects outright; others are millis and read
@@ -164,14 +115,3 @@ def load_table(spark, sf_dir: str, name: str):
         elif dtypes.get(c, "").startswith("timestamp"):
             df = df.withColumn(c, F.col(c).cast(T.TimestampType()))
     return df
-
-
-def load_testdata(spark, sf_dir: str, tables=TESTDATA_TABLES):
-    """Load the driver's parquet tables as a dict of DataFrames."""
-    return {t: load_table(spark, sf_dir, t) for t in tables}
-
-
-def register_testdata(spark, sf_dir: str, tables=TESTDATA_TABLES) -> None:
-    """Register each testdata table as a temp view for spark.sql queries."""
-    for name, df in load_testdata(spark, sf_dir, tables).items():
-        df.createOrReplaceTempView(name)

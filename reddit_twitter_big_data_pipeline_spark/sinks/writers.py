@@ -1,4 +1,4 @@
-"""Sinks — SURVEY §2.2 (K1, K2, K7, K8) + the upsert primitive (A2/W4/W5).
+"""Sinks — SURVEY §2.2 (K1, K2, K8) + the upsert primitive (A2/W4/W5).
 
 The reference's sinks are per-row `put_object` calls and one-transaction-per-
 record Cypher loops (reference: glue/reddit_glue.py:112-125). Here every sink
@@ -39,12 +39,6 @@ def write_csv_snapshot(df: DataFrame, path: str) -> None:
         ]
     )
     flat.write.mode("overwrite").option("header", True).csv(path)
-
-
-def overwrite_table(df: DataFrame, path: str) -> None:
-    """K7: truncate-and-reload (reference `MATCH (n) DETACH DELETE n`,
-    neo4j_insert/neo4j_reddit_insert.py:56-76) = overwrite-mode write."""
-    df.write.mode("overwrite").parquet(path)
 
 
 def dedupe_last_writer(df: DataFrame, keys: list[str], order_col: str) -> DataFrame:

@@ -1,4 +1,4 @@
-"""Sources — SURVEY §2.1 (S1-S5, S9) re-expressed as declarative scans.
+"""Sources — SURVEY §2.1 (S1-S5) re-expressed as declarative scans.
 
 Each reader returns a lazy DataFrame: filters passed here become Catalyst
 partition/predicate pushdown, never driver-side listing loops. The
@@ -66,14 +66,6 @@ def quarantine_split(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     return clean, corrupt
 
 
-def read_parquet_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Columnar scan of a driver testdata table (TESTDATA.md), with
-    TIMESTAMP(NANOS) columns repaired to TimestampType (schemas.load_table)."""
-    from .. import schemas
-
-    return schemas.load_table(spark, sf_dir, name)
-
-
 def latest_batch(df: DataFrame, batch_col: str = "timeStamp") -> DataFrame:
     """S4: keep only rows belonging to the newest micro-batch.
 
@@ -130,9 +122,3 @@ def read_orc_table(spark: SparkSession, path: str) -> DataFrame:
     PushedFilters). Exists so a lake standardized on ORC plugs in without
     touching any operator."""
     return spark.read.orc(path)
-
-
-def table_columns(spark: SparkSession, table: str) -> list[str]:
-    """S9: runtime schema lookup (reference: translate/translate.py:26-38),
-    against the Spark catalog instead of a Glue API call."""
-    return spark.table(table).columns

@@ -343,7 +343,7 @@ def dedup_first_seen(
     row per `id_col` and drop every later duplicate while the key's state
     lives. With `ttl_ms` set, the store expires the key after that
     processing-time horizon and the id re-admits — the processing-time
-    twin of `streams.dedup_stream`'s `dropDuplicatesWithinWatermark`
+    twin of `streams.dedupe_stream`'s `dropDuplicatesWithinWatermark`
     (which bounds state by EVENT time instead). The reference's re-scrape
     overlap (the same post re-fetched at T+2/T+3) is exactly this shape.
 

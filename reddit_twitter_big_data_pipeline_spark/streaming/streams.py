@@ -11,14 +11,21 @@ Here the same semantics are first-class Structured Streaming:
 
   W1  micro-batch trigger      → file-source `readStream` (+ maxFilesPerTrigger
                                  / availableNow for replay-all-then-stop)
-  W2  15-min tumbling window   → `window(ts, "15 minutes")` + watermark
-  W3  daily boundary/watermark → `window(ts, "1 day")` + 1-hour watermark
+  W2  15-min tumbling window   → `windowed_counts`: `window(ts, "15 minutes")`
+                                 + watermark (batch form: the registered
+                                 `w2_tumbling_window` query)
+  W3  daily boundary/watermark → `windowed_counts(window="1 day")` + 1-hour
+                                 watermark (batch form: `w3_daily_batches`,
+                                 keyed on `cleanse.dataload_label`)
   W4  3-day late refresh       → `foreachBatch` → delta_adapter.merge_upsert_auto
                                  (Delta MERGE INTO when delta-spark is
-                                 importable, writers.merge_upsert otherwise)
+                                 importable, writers.merge_upsert otherwise);
+                                 `upsert_stream_manifested` for the
+                                 manifest-committed store
   W5  exactly-once bookmarks   → checkpointLocation (file-source offsets log)
-  W6  sessionization (absent   → `session_window`; stream dedup via
-      in reference)              `dropDuplicatesWithinWatermark`
+  W6  sessionization (absent   → `sessionized_counts` over `session_window`
+      in reference)              (batch form: `w6_sessionize`); stream dedup
+                                 via `dedupe_stream`
 
 At 100 TB the same topology holds: the file source lists only NEW files per
 micro-batch (offset log keeps listing incremental), state for windowed aggs
@@ -133,14 +140,21 @@ def sessionized_counts(
 def dedupe_stream(
     df: DataFrame, keys: list[str], ts_col: str = "ts", watermark: str = "1 hour"
 ) -> DataFrame:
-    """A2-on-a-stream: drop duplicate natural keys within the watermark
-    horizon (bounded state). The batch twin is
-    sinks.writers.dedupe_last_writer."""
-    wm = df.withWatermark(ts_col, watermark)
-    try:
-        return wm.dropDuplicatesWithinWatermark(keys)
-    except Exception:  # Spark < 3.5 fallback: state unbounded by key count
-        return wm.dropDuplicates(keys)
+    """Streaming exact dedup: keep the FIRST arrival per key, dropping any
+    replay that lands within the watermark horizon — the streaming form of
+    A2/exact_dedupe (the batch twin is sinks.writers.dedupe_last_writer).
+    The reference re-scrapes overlapping 15-minute windows (reference:
+    twitter/lambda_function.py:27-29 queries `since:` the last window), so
+    the same tweet arrives in consecutive micro-batches; this drops the
+    re-arrivals inside the stream instead of relying on the sink MERGE to
+    absorb them.
+
+    Scale shape: `dropDuplicatesWithinWatermark` keeps one state entry per
+    key seen within `watermark` — state is BOUNDED by the duplicate-arrival
+    horizon (a couple of scrape windows), not by stream history, which is
+    what makes per-key dedup state viable on an unbounded stream. Compose
+    before windowed aggregation or upsert_stream."""
+    return df.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(keys)
 
 
 def stream_stream_join(
@@ -502,23 +516,6 @@ class _jvm_open:
 
     def __exit__(self, *exc):
         return False
-
-
-def dedup_stream(df: DataFrame, keys: list[str], event_time_col: str, delay: str = "10 minutes") -> DataFrame:
-    """Streaming exact dedup: keep the FIRST arrival per key, dropping any
-    replay that lands within the watermark horizon — the streaming form of
-    A2/exact_dedupe. The reference re-scrapes overlapping 15-minute windows
-    (reference: twitter/lambda_function.py:27-29 queries `since:` the last
-    window), so the same tweet arrives in consecutive micro-batches; this
-    drops the re-arrivals inside the stream instead of relying on the sink
-    MERGE to absorb them.
-
-    Scale shape: `dropDuplicatesWithinWatermark` keeps one state entry per
-    key seen within `delay` of the watermark — state is BOUNDED by the
-    duplicate-arrival horizon (here: a couple of scrape windows), not by
-    stream history, which is what makes per-key dedup state viable on an
-    unbounded stream. Compose before windowed aggregation or upsert_stream."""
-    return df.withWatermark(event_time_col, delay).dropDuplicatesWithinWatermark(keys)
 
 
 def graph_stream(

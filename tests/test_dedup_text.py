@@ -210,9 +210,15 @@ def _has_pil():
 
 @pytest.mark.skipif(_has_pil(), reason="Pillow installed: the seam decodes instead of raising")
 def test_real_backend_raises_at_seam_without_codec(spark):
-    media = spark.createDataFrame([(1, "image", bytearray(b"x"))], ["media_id", "kind", "payload"])
-    with pytest.raises(Exception, match="NotImplementedError|requires Pillow"):
-        multimodal.extract_features(media, backend="real").collect()
+    # an unknown blob and an arithmetic-coded JPEG (SOF9, which the
+    # in-container JPEG decoders do not parse) both stop at the Pillow seam
+    arith_jpeg = b"\xff\xd8\xff\xc9" + bytes([0, 11, 8, 0, 8, 0, 8, 1, 1, 0x11, 0])
+    for payload in (b"x", arith_jpeg):
+        media = spark.createDataFrame(
+            [(1, "image", bytearray(payload))], ["media_id", "kind", "payload"]
+        )
+        with pytest.raises(Exception, match="NotImplementedError|requires Pillow"):
+            multimodal.extract_features(media, backend="real").collect()
 
 
 @pytest.mark.skipif(not _has_pil(), reason="Pillow not in this container")

@@ -189,7 +189,7 @@ def test_dedup_stream_drops_replays_within_watermark(spark, tmp_path):
     _write_batch(land, "b1.json", _rows([(1, "2023-03-25 12:00:00"), (2, "2023-03-25 12:01:00")]))
     # overlap replay of id=2 plus a new id=3, inside the 1-hour horizon
     _write_batch(land, "b2.json", _rows([(2, "2023-03-25 12:05:00"), (3, "2023-03-25 12:06:00")]))
-    src = streams.dedup_stream(
+    src = streams.dedupe_stream(
         _with_ts(streams.read_json_stream(spark, str(land), SCHEMA)), ["id"], "ts", "1 hour"
     )
     streams.run_to_completion(streams.write_stream(src, out, ckpt))
