@@ -3,11 +3,11 @@ extended r12 per VERDICT r11 item 5): SURVEY §1-§2's Spark mapping for
 the reference's idempotent upserts (Cypher MERGE, reference:
 glue/reddit_glue.py:72-79; the T+2/3-day score re-crawl,
 reddit/lambda_function_aggregate.py:59-71) says "Delta MERGE"; the
-engine ships a crash-safe manifested-parquet MERGE so it has zero hard
-dependencies. This adapter closes the cluster-adoption gap: when
-`delta-spark` is importable, the `*_auto` entry points route through
-real Delta transactions (one dependency, zero code change); otherwise
-they fall back to the `writers` parquet implementations unchanged:
+engine ships crash-safe parquet MERGEs so it has zero hard dependencies.
+This adapter closes the cluster-adoption gap: when `delta-spark` is
+importable, the `*_auto` entry points route through real Delta
+transactions (one dependency, zero code change); otherwise they fall back
+to the `writers` parquet implementations unchanged:
 
   merge_upsert_auto             -> Delta MERGE INTO
   merge_upsert_partitioned_auto -> Delta MERGE INTO with partition keys
@@ -30,15 +30,14 @@ they fall back to the `writers` parquet implementations unchanged:
   convert_to_delta              -> CONVERT TO DELTA migration for tables
                                    the parquet path was maintaining
 
-Semantics contract (mirrors `writers.merge_upsert` exactly):
-- updates win over existing rows; among duplicate update keys the largest
-  `order_col` wins — Delta MERGE requires unique source keys, so the
-  source is pre-deduped with the same window;
+Semantics contract (`writers._last_writer_wins`, the parquet merges'
+policy):
+- among duplicate update keys the largest `order_col` wins — Delta MERGE
+  requires unique source keys, so the source is reduced by that same rule;
 - last-writer-wins across calls: a matched row updates only when
-  `s.order_col >= t.order_col` (>= keeps update-over-existing on ties,
-  the `__src` provenance rule of the parquet path);
-- key comparison is null-safe (`<=>`), matching the window partitioning
-  of the parquet path where NULL keys group together.
+  `s.order_col >= t.order_col` (>= keeps update-over-existing on ties);
+- key comparison is null-safe (`<=>`), as NULL keys group together in
+  the parquet merges' window.
 """
 
 from __future__ import annotations
@@ -46,8 +45,7 @@ from __future__ import annotations
 import importlib
 import warnings
 
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from . import writers
 
@@ -104,19 +102,41 @@ def _route(spark: SparkSession, path: str):
     return "bootstrap", DeltaTable, None
 
 
-def _dedupe_updates(
-    updates: DataFrame, keys: list[str], order_col: str | None
+def _delta_merge(
+    spark: SparkSession,
+    DeltaTable,
+    route: str,
+    target_path: str,
+    updates: DataFrame,
+    keys: list[str],
+    order_col: str | None,
+    partition_cols: list[str] | None,
+    match_cols: list[str],
 ) -> DataFrame:
-    """Largest-`order_col` row per key among the updates themselves —
-    Delta MERGE rejects sources with duplicate match keys, and this is
-    the same pre-merge winner `writers.merge_upsert`'s window picks."""
-    order = [F.col(order_col).desc()] if order_col is not None else [F.lit(1)]
-    w = Window.partitionBy(*[F.col(k) for k in keys]).orderBy(*order)
-    return (
-        updates.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    """The one Delta MERGE chain both merge routes share. The source is
+    `updates` reduced by `writers._last_writer_wins` (Delta MERGE rejects
+    duplicate match keys, and that rule is the parquet merges' own). A
+    "bootstrap" route writes it as a new Delta table partitioned by
+    `partition_cols`; a "delta" route merges it on a null-safe `<=>` match
+    over `match_cols`, updating a matched row only when
+    `s.order_col >= t.order_col` (ties go to the update) and inserting
+    every non-match."""
+    src = writers._last_writer_wins(None, updates, keys, order_col)
+    if route == "bootstrap":
+        w = src.write.format("delta")
+        if partition_cols:
+            w = w.partitionBy(*partition_cols)
+        w.save(target_path)
+        return DeltaTable.forPath(spark, target_path).toDF()
+    cond = " AND ".join(f"t.`{k}` <=> s.`{k}`" for k in match_cols)
+    dt = DeltaTable.forPath(spark, target_path)
+    m = dt.alias("t").merge(src.alias("s"), cond)
+    if order_col is not None:
+        m = m.whenMatchedUpdateAll(condition=f"s.`{order_col}` >= t.`{order_col}`")
+    else:
+        m = m.whenMatchedUpdateAll()
+    m.whenNotMatchedInsertAll().execute()
+    return dt.toDF()
 
 
 def merge_upsert_auto(
@@ -128,7 +148,8 @@ def merge_upsert_auto(
     partition_cols: list[str] | None = None,
 ) -> DataFrame:
     """`merge_upsert` through Delta `MERGE INTO` when delta-spark is
-    importable; the crash-safe manifested-parquet merge otherwise.
+    importable; otherwise `writers.merge_upsert`, the full-table parquet
+    merge committed by a staged two-rename swap.
 
     With Delta: a MISSING target bootstraps as a new Delta table
     (partitioned by `partition_cols` when given — Delta then scopes the
@@ -159,22 +180,10 @@ def merge_upsert_auto(
                 stacklevel=2,
             )
         return writers.merge_upsert(spark, target_path, updates, keys, order_col)
-    src = _dedupe_updates(updates, keys, order_col)
-    if route == "bootstrap":
-        w = src.write.format("delta")
-        if partition_cols:
-            w = w.partitionBy(*partition_cols)
-        w.save(target_path)
-        return DeltaTable.forPath(spark, target_path).toDF()
-    cond = " AND ".join(f"t.`{k}` <=> s.`{k}`" for k in keys)
-    dt = DeltaTable.forPath(spark, target_path)
-    m = dt.alias("t").merge(src.alias("s"), cond)
-    if order_col is not None:
-        m = m.whenMatchedUpdateAll(condition=f"s.`{order_col}` >= t.`{order_col}`")
-    else:
-        m = m.whenMatchedUpdateAll()
-    m.whenNotMatchedInsertAll().execute()
-    return dt.toDF()
+    return _delta_merge(
+        spark, DeltaTable, route, target_path, updates, keys, order_col,
+        partition_cols, keys,
+    )
 
 
 def merge_upsert_partitioned_auto(
@@ -220,21 +229,10 @@ def merge_upsert_partitioned_auto(
         return writers.merge_upsert_partitioned(
             spark, target_path, updates, keys, partition_cols, order_col
         )
-    src = _dedupe_updates(updates, keys, order_col)
-    if route == "bootstrap":
-        src.write.format("delta").partitionBy(*partition_cols).save(target_path)
-        return DeltaTable.forPath(spark, target_path).toDF()
-    cond = " AND ".join(
-        f"t.`{k}` <=> s.`{k}`" for k in [*keys, *partition_cols]
+    return _delta_merge(
+        spark, DeltaTable, route, target_path, updates, keys, order_col,
+        partition_cols, [*keys, *partition_cols],
     )
-    dt = DeltaTable.forPath(spark, target_path)
-    m = dt.alias("t").merge(src.alias("s"), cond)
-    if order_col is not None:
-        m = m.whenMatchedUpdateAll(condition=f"s.`{order_col}` >= t.`{order_col}`")
-    else:
-        m = m.whenMatchedUpdateAll()
-    m.whenNotMatchedInsertAll().execute()
-    return dt.toDF()
 
 
 def partition_moved_keys(

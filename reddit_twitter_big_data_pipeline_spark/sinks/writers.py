@@ -5,8 +5,10 @@ record Cypher loops (reference: glue/reddit_glue.py:112-125). Here every sink
 is a distributed table write; "upsert" — the semantics behind every Cypher
 MERGE in the reference — is implemented as partition-overwrite MERGE
 emulation (no Delta Lake in this environment): union new rows over old,
-last-writer-wins per key. On a Delta/Iceberg deployment `merge_upsert`
-becomes a real `MERGE INTO` with the same call signature.
+last-writer-wins per key. That policy is written once, in
+`_last_writer_wins`; every merge here and the Delta adapter's MERGE source
+go through it. On a Delta/Iceberg deployment `merge_upsert` becomes a real
+`MERGE INTO` with the same call signature (`delta_adapter`).
 """
 
 from __future__ import annotations
@@ -41,12 +43,37 @@ def write_csv_snapshot(df: DataFrame, path: str) -> None:
     flat.write.mode("overwrite").option("header", True).csv(path)
 
 
+def _last_writer_wins(
+    base: DataFrame | None, updates: DataFrame, keys: list[str], order_col: str | None
+) -> DataFrame:
+    """The engine's one merge policy: keyed last-writer-wins, the semantics
+    behind every Cypher MERGE in the reference (glue/reddit_glue.py:72-79)
+    and its late score re-crawl. `base` is the existing table (or the
+    touched slice of it; None on a first write). Per key the row with the
+    largest `order_col` survives; ties, and every key when `order_col` is
+    None, go to the update over the existing row. Keys are grouped by a
+    window partition, so NULL keys group together. One shuffle on the key —
+    the same shuffle a MERGE would need. Replaying the same updates is a
+    no-op, which is what makes every sink built on it replay-idempotent."""
+    rows = updates.withColumn("__src", F.lit(1))
+    if base is not None:
+        rows = base.withColumn("__src", F.lit(0)).unionByName(rows)
+    order = [F.col("__src").desc()]
+    if order_col is not None:
+        order.insert(0, F.col(order_col).desc())
+    w = Window.partitionBy(*[F.col(k) for k in keys]).orderBy(*order)
+    return (
+        rows.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .drop("__rn", "__src")
+    )
+
+
 def dedupe_last_writer(df: DataFrame, keys: list[str], order_col: str) -> DataFrame:
     """Keep the newest row per natural key (MERGE-then-SET semantics,
-    reference: glue/twitter_glue.py:76-91). Window + row_number: one shuffle
-    on the key — the same shuffle a MERGE would need."""
-    w = Window.partitionBy(*[F.col(k) for k in keys]).orderBy(F.col(order_col).desc())
-    return df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
+    reference: glue/twitter_glue.py:76-91): `_last_writer_wins` with no
+    existing table."""
+    return _last_writer_wins(None, df, keys, order_col)
 
 
 def _hadoop_fs(spark: SparkSession, path: str):
@@ -108,12 +135,11 @@ def _swap_into_place(spark: SparkSession, target_path: str, staging_path: str) -
 
 def replace_table(spark: SparkSession, target_path: str, df: DataFrame) -> None:
     """Crash-safe full replacement of the parquet table at `target_path`
-    with `df` — `merge_upsert`'s staging-then-swap discipline without the
-    key merge, for callers whose plan READS the current table (e.g. the
-    streaming KMV fold: new state = f(old state, batch)). The plan is
-    fully written to staging while the old files are intact, then
-    swapped; a plain overwrite would delete the very files the plan is
-    still reading."""
+    with `df`, for callers whose plan READS the current table
+    (`merge_upsert`, `compact_table`, the streaming KMV fold: new state =
+    f(old state, batch)). The plan is fully written to staging while the
+    old files are intact, then swapped; a plain overwrite would delete the
+    very files the plan is still reading."""
     recover_interrupted_swap(spark, target_path)
     staging = target_path + ".__staging__"
     df.write.mode("overwrite").parquet(staging)
@@ -135,38 +161,26 @@ def merge_upsert(
     (reference: reddit/lambda_function_aggregate.py:59-71) and its
     idempotent re-runs (Cypher MERGE, glue/reddit_glue.py:72-79).
 
-    Updates win over existing rows; among duplicate update keys the largest
-    `order_col` wins (ties broken by provenance: update > existing). Returns
-    the merged frame after writing it back.
+    The policy is `_last_writer_wins`: among duplicate keys the largest
+    `order_col` wins, ties broken by provenance (update > existing).
+    Returns the merged frame after writing it back. A target that exists
+    but cannot be read raises; only a missing path is a first write.
 
     Crash safety (VERDICT r1 item 4): the merge is FULLY WRITTEN to a
-    staging path while the target is still intact — the plan reads the old
-    files to the very end, so no recomputation can ever observe a
-    half-deleted source — and only then swapped into place. A failure at
+    staging path by `replace_table` while the target is still intact —
+    the plan reads the old files to the very end, so no recomputation can
+    ever observe a half-deleted source — and only then swapped into
+    place. A failure at
     any point leaves either the old table or both copies on disk, never
     neither; a crash between the swap's two renames is healed by
     `recover_interrupted_swap` on the next call before anything is read.
     """
     recover_interrupted_swap(spark, target_path)
-    try:
-        existing = spark.read.parquet(target_path)
-        base = existing.withColumn("__src", F.lit(0))
-    except Exception:  # first write: target doesn't exist yet
-        base = None
-    upd = updates.withColumn("__src", F.lit(1))
-    merged = upd if base is None else base.unionByName(upd)
-    order = [F.col("__src").desc()]
-    if order_col is not None:
-        order = [F.col(order_col).desc(), F.col("__src").desc()]
-    w = Window.partitionBy(*[F.col(k) for k in keys]).orderBy(*order)
-    result = (
-        merged.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn", "__src")
-    )
-    staging = target_path + ".__staging__"
-    result.write.mode("overwrite").parquet(staging)
-    _swap_into_place(spark, target_path, staging)
+    fs, tgt = _hadoop_fs(spark, target_path)
+    # "first write" is decided by the path, never by a failed read: an
+    # unreadable table must raise, not be replaced by the updates alone
+    base = spark.read.parquet(target_path) if fs.exists(tgt) else None
+    replace_table(spark, target_path, _last_writer_wins(base, updates, keys, order_col))
     return spark.read.parquet(target_path)
 
 
@@ -258,24 +272,33 @@ def merge_upsert_partitioned(
     `recover_partition_swaps` heals on the next call — and never corrupts
     an untouched partition.
     """
-    w_order = [F.col("__src").desc()]
-    if order_col is not None:
-        w_order = [F.col(order_col).desc(), F.col("__src").desc()]
-    w = Window.partitionBy(*[F.col(k) for k in keys]).orderBy(*w_order)
 
     def combine(base, upd):
-        merged = upd if base is None else base.withColumn("__src", F.lit(0)).unionByName(
-            upd.withColumn("__src", F.lit(1))
-        )
-        if base is None:
-            merged = merged.withColumn("__src", F.lit(1))
-        return (
-            merged.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn", "__src")
-        )
+        return _last_writer_wins(base, upd, keys, order_col)
 
     return _merge_partition_scoped(spark, target_path, updates, partition_cols, combine)
+
+
+def _touched_partitions(updates: DataFrame, partition_cols: list[str]):
+    """The partition-pruning step both scoped merges share. Returns
+    (staged updates, predicate over the touched partitions), or
+    (staged updates, None) when `updates` has no rows. The collect of the
+    touched partition values and the merge's staged write both read
+    `updates`, so it is staged (`checkpointing.stage`) to run its plan
+    once. The values are bounded by contract: one update batch touches
+    few partitions, which is the whole point of a scoped merge."""
+    updates = checkpointing.stage(updates)
+    touched = [r.asDict() for r in updates.select(*partition_cols).distinct().collect()]
+    if not touched:
+        return updates, None
+    pred = F.lit(False)
+    for part in touched:
+        clause = F.lit(True)
+        for c in partition_cols:
+            v = part[c]
+            clause = clause & (F.col(c).isNull() if v is None else (F.col(c) == F.lit(v)))
+        pred = pred | clause
+    return updates, pred
 
 
 def _merge_partition_scoped(
@@ -307,28 +330,14 @@ def _merge_partition_scoped(
             return first
         return spark.read.parquet(target_path)
 
-    # 1. the touched partition values — bounded by contract (one update
-    #    batch touches few partitions; this is the whole point of the op).
-    #    The collect and the staged write both read `updates`: stage it so
-    #    its plan runs once.
-    updates = checkpointing.stage(updates)
-    touched = [r.asDict() for r in updates.select(*partition_cols).distinct().collect()]
-    if not touched:
-        return spark.read.parquet(target_path)
-
-    # 2. read the existing table pruned to ONLY the touched partitions —
+    # 1. read the existing table pruned to ONLY the touched partitions —
     #    partition pruning keeps every other partition's files unread
-    existing = spark.read.parquet(target_path)
-    pred = F.lit(False)
-    for part in touched:
-        clause = F.lit(True)
-        for c in partition_cols:
-            v = part[c]
-            clause = clause & (F.col(c).isNull() if v is None else (F.col(c) == F.lit(v)))
-        pred = pred | clause
-    result = combine(existing.filter(pred), updates)
+    updates, touched = _touched_partitions(updates, partition_cols)
+    if touched is None:
+        return spark.read.parquet(target_path)
+    result = combine(spark.read.parquet(target_path).filter(touched), updates)
 
-    # 3. stage the merged slice fully (old files still intact → the plan can
+    # 2. stage the merged slice fully (old files still intact → the plan can
     #    read them to the end), then swap each touched partition dir
     staging = target_path + ".__pstaging__"
     result.write.mode("overwrite").partitionBy(*partition_cols).parquet(staging)
@@ -400,6 +409,16 @@ def _manifest_versions(fs, jvm, root: str) -> list[int]:
     return sorted(out)
 
 
+def _read_bytes(fs, jvm, path) -> bytes:
+    """All bytes of the small Hadoop-FS file at `path` (a manifest, a
+    stream marker), read in one JVM call."""
+    stream = fs.open(path)
+    try:
+        return bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
+    finally:
+        stream.close()
+
+
 def _read_manifest(fs, jvm, root: str, version: int) -> dict[str, int]:
     """Load manifest `version`: {relative partition dir: data version}."""
     import json
@@ -407,12 +426,7 @@ def _read_manifest(fs, jvm, root: str, version: int) -> dict[str, int]:
     p = jvm.org.apache.hadoop.fs.Path(
         f"{root}/{_MANIFEST_DIR}/v{version:010d}.json"
     )
-    stream = fs.open(p)
-    try:
-        data = bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
-    finally:
-        stream.close()
-    doc = json.loads(data.decode("utf-8"))
+    doc = json.loads(_read_bytes(fs, jvm, p).decode("utf-8"))
     return {str(k): int(v) for k, v in doc["partitions"].items()}
 
 
@@ -561,21 +575,6 @@ def merge_upsert_manifested(
     jvm = spark._jvm
     fs, _ = _hadoop_fs(spark, target_path)
 
-    w_order = [F.col("__src").desc()]
-    if order_col is not None:
-        w_order = [F.col(order_col).desc(), F.col("__src").desc()]
-    w = Window.partitionBy(*[F.col(k) for k in keys]).orderBy(*w_order)
-
-    def combine(base, upd):
-        merged = upd.withColumn("__src", F.lit(1))
-        if base is not None:
-            merged = base.withColumn("__src", F.lit(0)).unionByName(merged)
-        return (
-            merged.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn", "__src")
-        )
-
     versions = _manifest_versions(fs, jvm, target_path)
     cur_ver = versions[-1] if versions else 0
     cur_parts = (
@@ -583,26 +582,13 @@ def merge_upsert_manifested(
     )
     new_ver = cur_ver + 1
 
+    base = None
     if cur_parts:
-        updates = checkpointing.stage(updates)
-        touched = [
-            r.asDict() for r in updates.select(*partition_cols).distinct().collect()
-        ]
-        if not touched:
+        updates, touched = _touched_partitions(updates, partition_cols)
+        if touched is None:
             return read_manifested(spark, target_path)
-        existing = read_manifested(spark, target_path)
-        pred = F.lit(False)
-        for part in touched:
-            clause = F.lit(True)
-            for c in partition_cols:
-                v = part[c]
-                clause = clause & (
-                    F.col(c).isNull() if v is None else (F.col(c) == F.lit(v))
-                )
-            pred = pred | clause
-        result = combine(existing.filter(pred), updates)
-    else:
-        result = combine(None, updates)
+        base = read_manifested(spark, target_path).filter(touched)
+    result = _last_writer_wins(base, updates, keys, order_col)
 
     # 1. stage fully (old snapshot still intact end-to-end for the plan),
     #    then move each staged partition under its immutable version name.
@@ -886,7 +872,7 @@ def compact_table(
     up with the sort key and selective scans skip whole files (poor man's
     data clustering). With `zorder_cols` (mutually exclusive) the sort key
     is the Morton value over several columns, clustering all of them at
-    once. Uses the same staging + two-rename swap as merge_upsert, so a
+    once. Writes through `replace_table`'s staging + two-rename swap, so a
     crash never loses the table. Returns the file count written."""
     if sort_cols and zorder_cols:
         raise ValueError("pass sort_cols OR zorder_cols, not both")
@@ -908,9 +894,7 @@ def compact_table(
         )
     else:
         df = df.coalesce(n_files) if df.rdd.getNumPartitions() > n_files else df
-    staging = path + ".__staging__"
-    df.write.mode("overwrite").parquet(staging)
-    _swap_into_place(spark, path, staging)
+    replace_table(spark, path, df)
     return n_files
 
 

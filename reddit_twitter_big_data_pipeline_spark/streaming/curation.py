@@ -301,7 +301,6 @@ def curate_stream_v2(
     shingle_k: int = 3,
     bands: int = 16,
     hash_fn: str = "xxhash64",
-    available_now: bool = True,
     quota_mode: str = "lifetime",
     date_col: str | None = None,
 ) -> StreamingQuery:
@@ -536,9 +535,7 @@ def curate_stream_v2(
     writer = stream.writeStream.foreachBatch(_admit).option(
         "checkpointLocation", checkpoint
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return writer.trigger(availableNow=True).start()
 
 
 _STATE_TABLES = ("fps", "shingles", "bands", "domains", "ids")

@@ -9,8 +9,9 @@ settled Reddit scores (reference: reddit/lambda_function_aggregate.py:38,59-71).
 
 Here the same semantics are first-class Structured Streaming:
 
-  W1  micro-batch trigger      → file-source `readStream` (+ maxFilesPerTrigger
-                                 / availableNow for replay-all-then-stop)
+  W1  micro-batch trigger      → file-source `readStream` (+ maxFilesPerTrigger);
+                                 every sink below runs under the availableNow
+                                 trigger: replay all new input, then stop
   W2  15-min tumbling window   → `windowed_counts`: `window(ts, "15 minutes")`
                                  + watermark (batch form: the registered
                                  `w2_tumbling_window` query)
@@ -262,22 +263,20 @@ def write_stream(
     checkpoint: str,
     fmt: str = "parquet",
     output_mode: str = "append",
-    available_now: bool = True,
     partition_by: list[str] | None = None,
 ) -> StreamingQuery:
     """W5: checkpointed sink — the offset log + sink commit log give the
     exactly-once progress the reference got from Glue job bookmarks
     (reference: terraform/main.tf:374,402; glue/reddit_glue.py:282
-    `job.commit()`). `available_now=True` = "process everything new, then
-    stop": the direct analog of one nightly Glue run."""
+    `job.commit()`). Like every sink in this module it runs under the
+    availableNow trigger, "process everything new, then stop": the direct
+    analog of one nightly Glue run."""
     writer = df.writeStream.format(fmt).option("checkpointLocation", checkpoint).outputMode(
         output_mode
     )
     if partition_by:
         writer = writer.partitionBy(*partition_by)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start(path)
+    return writer.trigger(availableNow=True).start(path)
 
 
 def upsert_stream(
@@ -286,7 +285,6 @@ def upsert_stream(
     checkpoint: str,
     keys: list[str],
     order_col: str | None = None,
-    available_now: bool = True,
     partition_cols: list[str] | None = None,
 ) -> StreamingQuery:
     """W4: late-data refresh as a streaming MERGE. Each micro-batch upserts
@@ -325,9 +323,7 @@ def upsert_stream(
             )
 
     writer = df.writeStream.foreachBatch(_merge).option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return writer.trigger(availableNow=True).start()
 
 
 def upsert_stream_manifested(
@@ -337,8 +333,6 @@ def upsert_stream_manifested(
     keys: list[str],
     partition_cols: list[str],
     order_col: str | None = None,
-    available_now: bool = True,
-    max_retries: int = 3,
 ) -> StreamingQuery:
     """W4 against the MANIFEST-COMMITTED store: each micro-batch merges via
     `merge_upsert_manifested_retrying`, composing the streaming layer with
@@ -346,27 +340,20 @@ def upsert_stream_manifested(
     stream (via `read_manifested`) only ever observes complete committed
     snapshots, and an external batch writer racing a micro-batch resolves
     through OCC (the micro-batch retries on `ConcurrentWriteError` against
-    the new snapshot). Exactly-once end-to-end: the checkpoint commits
-    each batch's offsets once, and a crash-replayed batch re-merges the
-    same keyed rows into the same snapshot state (keyed last-writer-wins
-    is idempotent under replay)."""
+    the new snapshot, as often as the retrying merge's default allows).
+    Exactly-once end-to-end: the checkpoint commits each batch's offsets
+    once, and a crash-replayed batch re-merges the same keyed rows into the
+    same snapshot state (keyed last-writer-wins is idempotent under
+    replay)."""
 
     def _merge(batch: DataFrame, batch_id: int) -> None:
         # the merge reads the batch once and commits nothing for an empty one
         writers.merge_upsert_manifested_retrying(
-            batch.sparkSession,
-            target_path,
-            batch,
-            keys,
-            partition_cols,
-            order_col,
-            max_retries=max_retries,
+            batch.sparkSession, target_path, batch, keys, partition_cols, order_col
         )
 
     writer = df.writeStream.foreachBatch(_merge).option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return writer.trigger(availableNow=True).start()
 
 
 def kmv_stream(
@@ -376,7 +363,6 @@ def kmv_stream(
     checkpoint: str,
     group_cols: list[str] | None = None,
     k: int = 256,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Streaming distinct-count maintenance via the KMV sketch
     (operators/sketches.py): each micro-batch sketches only ITS rows —
@@ -413,9 +399,7 @@ def kmv_stream(
         writers.replace_table(spark, target_path, merged)
 
     writer = df.writeStream.foreachBatch(_fold).option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return writer.trigger(availableNow=True).start()
 
 
 def rollup_stream(
@@ -425,7 +409,6 @@ def rollup_stream(
     group_keys: list[str],
     sum_cols: list[str],
     partition_cols: list[str],
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Continuous aggregate (the W2/W3 rollup, maintained incrementally):
     each micro-batch reduces to partial sums by `group_keys` and folds into
@@ -455,8 +438,7 @@ def rollup_stream(
 
         fs, inc_path = writers._hadoop_fs(spark, checkpoint + "/__rollup_incarnation__")
         if fs.exists(inc_path):
-            with _jvm_open(spark, fs, inc_path) as data:
-                return data
+            return writers._read_bytes(fs, spark._jvm, inc_path).decode("ascii")
         inc = uuid.uuid4().hex
         out = fs.create(inc_path, True)
         out.write(inc.encode("ascii"))
@@ -470,10 +452,10 @@ def rollup_stream(
         inc = _incarnation(spark)
         fs, marker = writers._hadoop_fs(spark, target_path + ".__last_batch__")
         if fs.exists(marker):
-            with _jvm_open(spark, fs, marker) as data:
-                m_inc, _, m_id = data.rpartition(":")
-                if m_inc == inc and batch_id <= int(m_id):
-                    return  # replayed batch of THIS incarnation: already folded
+            data = writers._read_bytes(fs, spark._jvm, marker).decode("ascii")
+            m_inc, _, m_id = data.rpartition(":")
+            if m_inc == inc and batch_id <= int(m_id):
+                return  # replayed batch of THIS incarnation: already folded
         partial = batch.groupBy(*group_keys).agg(
             *[F.sum(c).alias(c) for c in sum_cols]
         )
@@ -490,39 +472,13 @@ def rollup_stream(
         fs2.rename(tmp_path, marker)
 
     writer = df.writeStream.foreachBatch(_fold).option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-class _jvm_open:
-    """Context manager reading a small HDFS-API file's bytes as str."""
-
-    def __init__(self, spark, fs, path):
-        self.fs, self.path = fs, path
-
-    def __enter__(self) -> str:
-        stream = self.fs.open(self.path)
-        try:
-            chunks = []
-            while True:
-                b = stream.read()
-                if b < 0:
-                    break
-                chunks.append(chr(b))
-            return "".join(chunks)
-        finally:
-            stream.close()
-
-    def __exit__(self, *exc):
-        return False
+    return writer.trigger(availableNow=True).start()
 
 
 def graph_stream(
     tweets: DataFrame,
     transport_factory,
     checkpoint: str,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """The reference's full topology as ONE streaming pipeline: scraped
     tweets stream in, each micro-batch derives the nodes/edges model and
@@ -552,9 +508,7 @@ def graph_stream(
     writer = tweets.writeStream.foreachBatch(_serve).option(
         "checkpointLocation", checkpoint
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return writer.trigger(availableNow=True).start()
 
 
 def run_to_completion(query: StreamingQuery, timeout_s: int = 300) -> None:

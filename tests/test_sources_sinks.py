@@ -180,6 +180,87 @@ def test_merge_upsert_partitioned_matches_full_merge(spark, tmp_path):
     )
 
 
+_POLICY_SCHEMA = "id string, v long, val string, day string"
+
+# (existing rows, update batch, order_col, expected table); the row
+# ("b", 1, "keep", "d1") must survive every case untouched
+_POLICY_CASES = {
+    "order_tie_goes_to_update": (
+        [("a", 5, "old", "d1")], [("a", 5, "new", "d1")], "v", [("a", 5, "new", "d1")]
+    ),
+    "duplicate_update_keys_largest_order_wins": (
+        [("a", 1, "old", "d1")],
+        [("a", 3, "mid", "d1"), ("a", 9, "new", "d1"), ("a", 2, "low", "d1")],
+        "v",
+        [("a", 9, "new", "d1")],
+    ),
+    "null_key_replaces_null_key_row": (
+        [(None, 1, "old", "d1")], [(None, 2, "new", "d1")], "v", [(None, 2, "new", "d1")]
+    ),
+    "no_order_col_update_wins": (
+        [("a", 9, "old", "d1")], [("a", 1, "new", "d1")], None, [("a", 1, "new", "d1")]
+    ),
+}
+
+
+def _merge_full(spark, path, df, order_col):
+    return writers.merge_upsert(spark, path, df, ["id"], order_col)
+
+
+def _merge_partitioned(spark, path, df, order_col):
+    return writers.merge_upsert_partitioned(spark, path, df, ["id"], ["day"], order_col)
+
+
+def _merge_manifested(spark, path, df, order_col):
+    return writers.merge_upsert_manifested(spark, path, df, ["id"], ["day"], order_col)
+
+
+def _merge_auto_fallback(spark, path, df, order_col):
+    from reddit_twitter_big_data_pipeline_spark.sinks import delta_adapter
+
+    return delta_adapter.merge_upsert_auto(spark, path, df, ["id"], order_col)
+
+
+@pytest.mark.parametrize("case", sorted(_POLICY_CASES))
+@pytest.mark.parametrize(
+    "merge", [_merge_full, _merge_partitioned, _merge_manifested, _merge_auto_fallback]
+)
+def test_merges_share_the_last_writer_wins_policy(spark, tmp_path, merge, case):
+    """Every parquet merge applies the one keyed last-writer-wins rule:
+    order_col ties and a missing order_col go to the update, the largest
+    order_col wins among duplicate update keys, and NULL keys group
+    together."""
+    existing, updates, order_col, want = _POLICY_CASES[case]
+    path = str(tmp_path / "tbl")
+    merge(spark, path, spark.createDataFrame(existing + [("b", 1, "keep", "d1")],
+                                             _POLICY_SCHEMA), order_col)
+    out = merge(spark, path, spark.createDataFrame(updates, _POLICY_SCHEMA), order_col)
+    got = sorted(map(tuple, out.select("id", "v", "val", "day").collect()), key=str)
+    assert got == sorted(want + [("b", 1, "keep", "d1")], key=str)
+
+
+def test_merge_upsert_unreadable_target_raises_and_keeps_files(spark, tmp_path):
+    """A target that exists but cannot be read is not a first write: the
+    merge raises and leaves every file of the table byte-identical,
+    instead of swapping the update batch in over the whole table."""
+    target = str(tmp_path / "tbl")
+    rows = [(f"k{i}", i) for i in range(100)]
+    writers.merge_upsert(spark, target, spark.createDataFrame(rows, ["id", "v"]), ["id"], "v")
+    table = tmp_path / "tbl"
+    for f in table.glob("*.parquet"):
+        data = f.read_bytes()
+        f.write_bytes(data[:-8] + b"\0" * 8)  # footer length and magic gone
+    for crc in table.glob(".*.crc"):
+        crc.unlink()  # a damaged footer, not a checksum mismatch
+    before = _file_state(table)
+    assert before
+    with pytest.raises(Exception):
+        writers.merge_upsert(
+            spark, target, spark.createDataFrame([("k0", 99)], ["id", "v"]), ["id"], "v"
+        )
+    assert _file_state(table) == before
+
+
 def test_merge_upsert_partitioned_null_partition_value(spark, tmp_path):
     """Null partition values land in __HIVE_DEFAULT_PARTITION__; the prune
     filter (isNull) and the staging-dir-name-driven swap must both handle

@@ -62,11 +62,17 @@ def canon(df: pd.DataFrame) -> tuple[int, list[str], str]:
     return len(df), sorted(df.columns), h.hexdigest()
 
 
+def query_names(argv: list[str]) -> set[str] | None:
+    """The queries to grade from `[sf_dir] [query ...]`, None for all. The
+    first argument is the sf dir only when it is a directory; every other
+    argument names a query."""
+    names = argv[1:] if argv and os.path.isdir(argv[0]) else argv
+    return set(names) or None
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 and os.path.isdir(sys.argv[1]) else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:]) if len(sys.argv) > 2 else (
-        set(sys.argv[1:]) if len(sys.argv) > 1 and not os.path.isdir(sys.argv[1]) else None
-    )
+    only = query_names(sys.argv[1:])
 
     import __spark_entry__ as E
     from reddit_twitter_big_data_pipeline_spark.session import get_spark
