@@ -676,7 +676,7 @@ def sessionize_batch(
     gap_minutes: int = 30,
 ) -> DataFrame:
     """Batch gap-based sessionization — the offline twin of the streaming
-    `stateful.event_session_closer`/W6 sessions, for backfills and
+    W6 sessions (`streams.sessionized_counts`), for backfills and
     historical re-sessionization: a new session starts wherever a user's
     inter-event gap exceeds `gap_minutes`. The classic window
     composition: lag → gap flag → running sum of flags = session

@@ -65,7 +65,12 @@ def comment_depth(
     executor loss mid-traversal recovers instead of failing the job
     (checkpointing.truncate_lineage).
 
-    Spark has no recursive CTE; this is a level-synchronous iterative join.
+    A level-synchronous iterative join. Spark 4.1 runs `WITH RECURSIVE`,
+    but a recursive CTE's step rejoins the whole comment set at every
+    level. On the a4 thread tree at sf0.1 it measured no faster than this
+    loop and 3.5-7x slower than `comment_depth_auto` (ROADMAP Direction 8
+    has the numbers), so the loop stays.
+
     The key structural fact: the parent of a depth-d comment sits at depth
     d−1 EXACTLY, so each iteration joins the (fixed, cached) non-top-level
     set against only the PREVIOUS level — never the whole resolved set, and

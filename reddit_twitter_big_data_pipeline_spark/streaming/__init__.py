@@ -1,1 +1,1 @@
-from . import stateful, streams  # noqa: F401
+from . import streams  # noqa: F401

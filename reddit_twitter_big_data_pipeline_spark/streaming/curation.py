@@ -26,7 +26,7 @@ definition:
 `curate_stream_v2` instead runs `admit`'s stages per micro-batch against
 stored corpus state (see its docstring).
 
-State discipline (the 100-TB rules, matching stateful.py): quota state
+State discipline (the 100-TB rules): quota state
 is a single counter per domain — never buffered rows; dedup state is
 watermark-bounded; handlers iterate Arrow batches.
 

@@ -385,14 +385,17 @@ def kmv_stream(
             return
         spark = batch.sparkSession
         sk = sketches.kmv_build(batch, value_col, group_cols=group_cols, k=k)
-        try:
-            # heal a crash between the previous fold's two swap renames
-            # BEFORE probing for the table, or a recoverable state would
-            # be misread as "no sketch yet" and silently restart the count
-            writers.recover_interrupted_swap(spark, target_path)
+        # heal a crash between the previous fold's two swap renames BEFORE
+        # probing for the table, or a recoverable state would be misread as
+        # "no sketch yet" and silently restart the count
+        writers.recover_interrupted_swap(spark, target_path)
+        fs, tgt = writers._hadoop_fs(spark, target_path)
+        # "first batch" is decided by the path, never by a failed read: an
+        # unreadable sketch must raise, not be replaced by this batch's own
+        if fs.exists(tgt):
             existing = spark.read.parquet(target_path)
             merged = sketches.kmv_merge(existing, sk, k=k, group_cols=group_cols)
-        except Exception:  # first batch: no stored sketch yet
+        else:
             merged = sk
         # staging-then-swap keeps the old files intact until the swap, so
         # reading target_path inside the plan that replaces it is safe

@@ -16,13 +16,8 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 
 @pytest.fixture(scope="session")
 def spark():
-    from reddit_twitter_big_data_pipeline_spark import protobuf_compat
     from reddit_twitter_big_data_pipeline_spark.session import get_spark
 
-    # BEFORE the JVM starts: let State API v2 workers self-enable the
-    # pure-python protobuf fallback (no-op where protobuf is installed or
-    # the cloudsdk bundle is absent)
-    protobuf_compat.enable_for_workers()
     s = get_spark("engine-tests", cpus=4, shuffle_partitions=4)
     yield s
     s.stop()

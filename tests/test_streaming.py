@@ -236,80 +236,6 @@ def test_w6_dedupe_stream(spark, tmp_path):
     assert sorted(r.id for r in got.collect()) == [1, 2]
 
 
-# --- custom stateful operators (applyInPandasWithState) ---------------------
-
-
-EV_SCHEMA = T.StructType(
-    [
-        T.StructField("user_id", T.LongType(), False),
-        T.StructField("value", T.DoubleType(), True),
-        T.StructField("ts_s", T.StringType(), True),
-    ]
-)
-
-
-def test_stateful_running_user_stats_across_batches(spark, tmp_path):
-    from reddit_twitter_big_data_pipeline_spark.streaming import stateful
-
-    land = tmp_path / "land"
-    _write_batch(
-        land, "1.json",
-        [{"user_id": 1, "value": 1.0, "ts_s": "2023-03-25 12:00:00"},
-         {"user_id": 1, "value": 2.0, "ts_s": "2023-03-25 12:01:00"},
-         {"user_id": 2, "value": 5.0, "ts_s": "2023-03-25 12:02:00"}],
-    )
-    _write_batch(
-        land, "2.json",
-        [{"user_id": 1, "value": 3.0, "ts_s": "2023-03-25 12:10:00"}],
-    )
-    src = streams.read_json_stream(spark, str(land), EV_SCHEMA, max_files_per_trigger=1)
-    out = stateful.running_user_stats(src)
-    q = (
-        out.writeStream.format("memory").queryName("user_stats")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    streams.run_to_completion(q)
-    rows = spark.sql("select * from user_stats").collect()
-    # user 1 appears in both micro-batches: state carried over, totals grow
-    u1 = sorted((r.n_events, r.total_value) for r in rows if r.user_id == 1)
-    assert u1 == [(2, 3.0), (3, 6.0)]
-    u2 = [(r.n_events, r.total_value, r.last_seen) for r in rows if r.user_id == 2]
-    assert u2 == [(1, 5.0, "2023-03-25 12:02:00")]
-
-
-def test_stateful_burst_detector_fires_and_resets(spark, tmp_path):
-    from reddit_twitter_big_data_pipeline_spark.streaming import stateful
-
-    land = tmp_path / "land"
-    _write_batch(
-        land, "1.json",
-        [{"user_id": 1, "value": 1.0, "ts_s": "t"}, {"user_id": 1, "value": 1.0, "ts_s": "t"}],
-    )
-    _write_batch(
-        land, "2.json",
-        [{"user_id": 1, "value": 1.0, "ts_s": "t"}, {"user_id": 1, "value": 1.0, "ts_s": "t"},
-         {"user_id": 2, "value": 1.0, "ts_s": "t"}],
-    )
-    src = streams.read_json_stream(spark, str(land), EV_SCHEMA, max_files_per_trigger=1)
-    out = stateful.burst_detector(
-        src.withColumn("k", F.col("user_id").cast("string")), "k", threshold=3
-    )
-    q = (
-        out.writeStream.format("memory").queryName("bursts")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    streams.run_to_completion(q)
-    rows = spark.sql("select * from bursts").collect()
-    # key 1: 2 events (no fire) then 2 more → 4 ≥ 3 fires once; key 2 never
-    assert [(r.key, r.n_in_burst) for r in rows] == [("1", 4)]
-
-
 def test_stream_stream_join_time_bounded(spark, tmp_path):
     """Posts joined to refresh events within 15 min on the same key; the
     time bound keeps join state bounded (append mode requires it)."""
@@ -461,361 +387,6 @@ def test_stream_static_enrich(spark, tmp_path):
         streams.stream_static_enrich(src, dim, ["id"], how="full")
 
 
-def test_stateful_v2_ewma_carries_state_across_batches(spark, tmp_path):
-    """State API v2 (transformWithStateInPandas + ValueState): the EWMA seen
-    by batch 2 must continue from batch 1's final state, not restart.
-
-    EXECUTES in-container since r4: the workers' google.protobuf import is
-    satisfied by protobuf_compat (cloudsdk pure-python bundle + no-op
-    runtime_version shim, wired in conftest before the JVM started). Skips
-    only where neither protobuf nor the bundle exists."""
-    from reddit_twitter_big_data_pipeline_spark import protobuf_compat
-    from reddit_twitter_big_data_pipeline_spark.streaming import stateful
-
-    if not protobuf_compat.enable():
-        pytest.skip("no protobuf install and no cloudsdk pure-python bundle")
-
-    land = tmp_path / "land"
-    _write_batch(
-        land, "1.json",
-        [{"user_id": 1, "value": 10.0, "ts_s": "t"},
-         {"user_id": 2, "value": 20.0, "ts_s": "t"}],
-    )
-    _write_batch(land, "2.json", [{"user_id": 3, "value": 30.0, "ts_s": "t"}])
-    src = streams.read_json_stream(spark, str(land), EV_SCHEMA, max_files_per_trigger=1)
-    events = src.select(
-        F.lit("m").alias("event_type"),
-        F.col("user_id").alias("event_id"),
-        "value",
-    )
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        out = stateful.ewma_smoother(events, alpha=0.5)
-        q = (
-            out.writeStream.format("memory").queryName("ewma")
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            streams.run_to_completion(q)
-        except Exception as e:  # pragma: no cover - environment-dependent
-            pytest.skip(f"RocksDB state store unavailable: {e}")
-        got = {r.event_id: r.ewma for r in spark.sql("select * from ewma").collect()}
-        assert got[1] == 10.0
-        assert got[2] == 15.0   # 0.5*20 + 0.5*10
-        assert got[3] == 22.5   # 0.5*30 + 0.5*15 — state crossed the batch boundary
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-
-
-def test_stateful_v2_topn_merges_across_batches(spark, tmp_path):
-    """State API v2 ListState (topn_tracker): batch 2's leaderboard must
-    merge against batch 1's surviving top-N, not restart — and an id that
-    fell off the board must stay off."""
-    from reddit_twitter_big_data_pipeline_spark import protobuf_compat
-    from reddit_twitter_big_data_pipeline_spark.streaming import stateful
-
-    if not protobuf_compat.enable():
-        pytest.skip("no protobuf install and no cloudsdk pure-python bundle")
-
-    land = tmp_path / "land"
-    _write_batch(
-        land, "1.json",
-        [{"user_id": 1, "value": 10.0, "ts_s": "t"},
-         {"user_id": 2, "value": 30.0, "ts_s": "t"},
-         {"user_id": 3, "value": 20.0, "ts_s": "t"}],
-    )
-    _write_batch(
-        land, "2.json",
-        [{"user_id": 4, "value": 25.0, "ts_s": "t"},
-         {"user_id": 5, "value": 5.0, "ts_s": "t"}],
-    )
-    _write_batch(
-        land, "3.json",
-        [{"user_id": 2, "value": 40.0, "ts_s": "t"},
-         {"user_id": 2, "value": 1.0, "ts_s": "t"}],
-    )
-    # the file source orders batches by modification time — pin distinct
-    # mtimes so the three fixtures replay 1, 2, 3 deterministically
-    base = os.path.getmtime(str(land / "1.json"))
-    os.utime(str(land / "2.json"), (base + 1, base + 1))
-    os.utime(str(land / "3.json"), (base + 2, base + 2))
-    src = streams.read_json_stream(spark, str(land), EV_SCHEMA, max_files_per_trigger=1)
-    events = src.select(
-        F.lit("m").alias("event_type"),
-        F.col("user_id").alias("event_id"),
-        "value",
-    )
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    per_batch: dict[int, list[tuple]] = {}
-
-    def capture(df, batch_id):
-        per_batch[batch_id] = sorted(
-            (r.rank, r.event_id, r.value) for r in df.collect()
-        )
-
-    try:
-        out = stateful.topn_tracker(events, n=2)
-        q = (
-            out.writeStream.foreachBatch(capture)
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        streams.run_to_completion(q)
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-    # batch 1: top-2 of {10, 30, 20} -> (30, id2), (20, id3)
-    assert per_batch[0] == [(1, 2, 30.0), (2, 3, 20.0)]
-    # batch 2: 25 beats surviving 20; 5 never places; dropped id1 stays off
-    assert per_batch[1] == [(1, 2, 30.0), (2, 4, 25.0)]
-    # batch 3: id 2 re-reported (updated score) occupies ONE slot at its
-    # max — 40 replaces 30 rather than doubling up; the decrease to 1.0
-    # is ignored (max-per-id semantics)
-    assert per_batch[2] == [(1, 2, 40.0), (2, 4, 25.0)]
-
-
-def test_stateful_v2_transition_counts_carry_last_event(spark, tmp_path):
-    """State API v2 MapState (transition_counts_stream): batch 2's first
-    row must transition FROM batch 1's last event (ValueState carry), and
-    counts accumulate in the map across batches."""
-    from reddit_twitter_big_data_pipeline_spark import protobuf_compat
-    from reddit_twitter_big_data_pipeline_spark.streaming import stateful
-
-    if not protobuf_compat.enable():
-        pytest.skip("no protobuf install and no cloudsdk pure-python bundle")
-
-    land = tmp_path / "land"
-    # ts_s doubles as the event name; value as the within-batch order
-    _write_batch(
-        land, "1.json",
-        [{"user_id": 1, "value": 1.0, "ts_s": "A"},
-         {"user_id": 1, "value": 2.0, "ts_s": "B"},
-         {"user_id": 1, "value": 3.0, "ts_s": "A"},
-         {"user_id": 2, "value": 1.0, "ts_s": "X"}],
-    )
-    _write_batch(
-        land, "2.json",
-        [{"user_id": 1, "value": 4.0, "ts_s": "B"},   # A -> B again: n=2
-         {"user_id": 2, "value": 2.0, "ts_s": "X"}],  # X -> X: n=1
-    )
-    src = streams.read_json_stream(spark, str(land), EV_SCHEMA, max_files_per_trigger=1)
-    events = src.select(
-        "user_id",
-        F.col("ts_s").alias("event_type"),
-        F.col("value").cast("long").alias("event_id"),
-    )
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    per_batch: dict[int, set] = {}
-
-    def capture(df, batch_id):
-        per_batch[batch_id] = {
-            (r.key, r.from_event, r.to_event, r.n) for r in df.collect()
-        }
-
-    try:
-        out = stateful.transition_counts_stream(events)
-        q = (
-            out.writeStream.foreachBatch(capture)
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        streams.run_to_completion(q)
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-    assert per_batch[0] == {("1", "A", "B", 1), ("1", "B", "A", 1)}
-    # batch 2: user 1's A->B increments the MAP to 2 (carry: last was A);
-    # user 2's X->X materializes from its carried last event
-    assert per_batch[1] == {("1", "A", "B", 2), ("2", "X", "X", 1)}
-
-
-def test_stateful_v2_timers_close_idle_sessions(spark, tmp_path):
-    """State API v2 timers (idle_session_closer): a key idle past the gap
-    fires its processing-time timer and emits (key, exact count); new
-    activity afterwards starts a FRESH session (state was cleared)."""
-    import time
-
-    from reddit_twitter_big_data_pipeline_spark import protobuf_compat
-    from reddit_twitter_big_data_pipeline_spark.streaming import stateful
-
-    if not protobuf_compat.enable():
-        pytest.skip("no protobuf install and no cloudsdk pure-python bundle")
-
-    land = tmp_path / "land"
-    _write_batch(
-        land, "1.json",
-        [{"user_id": 1, "value": 1.0, "ts_s": "a"},
-         {"user_id": 1, "value": 2.0, "ts_s": "b"},
-         {"user_id": 2, "value": 3.0, "ts_s": "c"}],
-    )
-    src = streams.read_json_stream(spark, str(land), EV_SCHEMA, max_files_per_trigger=1)
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    sessions: list[tuple] = []
-
-    def capture(df, batch_id):
-        sessions.extend((r.key, r.n_events) for r in df.collect())
-
-    def wait_for(pred, timeout_s=120):
-        deadline = time.time() + timeout_s
-        while time.time() < deadline:
-            if pred():
-                return
-            time.sleep(0.5)
-        raise TimeoutError(f"condition not reached; sessions={sessions}")
-
-    out = stateful.idle_session_closer(src, key_col="user_id", idle_ms=2_000)
-    q = (
-        out.writeStream.foreachBatch(capture)
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(processingTime="500 milliseconds")
-        .start()
-    )
-    try:
-        # both keys go idle -> their timers fire with exact counts
-        wait_for(lambda: {("1", 2), ("2", 1)} <= set(sessions))
-        # renewed activity after the close opens a FRESH session
-        _write_batch(land, "2.json", [{"user_id": 1, "value": 4.0, "ts_s": "d"}])
-        wait_for(lambda: sessions.count(("1", 1)) >= 1)
-        assert sessions.count(("1", 2)) == 1, "closed session must not re-emit"
-    finally:
-        q.stop()
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-
-
-def test_stateful_v2_dedup_first_seen_with_ttl(spark, tmp_path):
-    """State API v2 ValueState + ttlDurationMs (dedup_first_seen): within
-    the TTL horizon a duplicate id is dropped across batches (and within a
-    batch, deterministically one row admits); after the state's TTL
-    lapses, the SAME id re-admits.
-
-    NOTE the trigger: timeMode='ProcessingTime' (required for TTL state)
-    makes Trigger.AvailableNow keep scheduling no-data batches for timer
-    evaluation — it never self-terminates. TTL operators therefore run
-    under a continuous processing-time trigger, polled and stopped
-    explicitly; that is their production shape anyway."""
-    import time
-
-    from reddit_twitter_big_data_pipeline_spark import protobuf_compat
-    from reddit_twitter_big_data_pipeline_spark.streaming import stateful
-
-    if not protobuf_compat.enable():
-        pytest.skip("no protobuf install and no cloudsdk pure-python bundle")
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    rows: list[tuple] = []
-
-    def capture(df, batch_id):
-        rows.extend((r.user_id, r.value, r.ts_s) for r in df.collect())
-
-    def wait_for(pred, timeout_s=120):
-        deadline = time.time() + timeout_s
-        while time.time() < deadline:
-            if pred():
-                return
-            time.sleep(0.5)
-        raise TimeoutError(f"condition not reached; rows={sorted(rows)}")
-
-    def start(land, ckpt, ttl_ms):
-        src = streams.read_json_stream(
-            spark, str(land), EV_SCHEMA, max_files_per_trigger=1
-        )
-        out = stateful.dedup_first_seen(src, id_col="user_id", ttl_ms=ttl_ms)
-        return (
-            out.writeStream.foreachBatch(capture)
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp_path / ckpt))
-            .trigger(processingTime="500 milliseconds")
-            .start()
-        )
-
-    try:
-        # --- phase A: drops inside a WIDE horizon (60 s) ----------------
-        land_a = tmp_path / "land_a"
-        _write_batch(
-            land_a, "1.json",
-            [{"user_id": 1, "value": 7.0, "ts_s": "a"},
-             {"user_id": 1, "value": 3.0, "ts_s": "b"},
-             {"user_id": 2, "value": 9.0, "ts_s": "c"}],
-        )
-        q = start(land_a, "ckpt_a", ttl_ms=60_000)
-        try:
-            # id1 admits its sort-minimum row exactly once (the in-batch
-            # duplicate 7.0 never emits); id2 admits
-            wait_for(lambda: {(1, 3.0, "b"), (2, 9.0, "c")} <= set(rows))
-            assert sorted(rows) == [(1, 3.0, "b"), (2, 9.0, "c")]
-            # a cross-batch duplicate inside the horizon is dropped —
-            # id3's admission proves the batch was processed
-            _write_batch(
-                land_a, "2.json",
-                [{"user_id": 1, "value": 99.0, "ts_s": "d"},
-                 {"user_id": 3, "value": 5.0, "ts_s": "e"}],
-            )
-            wait_for(lambda: (3, 5.0, "e") in rows)
-            assert (1, 99.0, "d") not in rows
-        finally:
-            q.stop()
-
-        # --- phase B: re-admission after a SHORT horizon (2 s) ----------
-        rows.clear()
-        land_b = tmp_path / "land_b"
-        _write_batch(
-            land_b, "1.json", [{"user_id": 1, "value": 3.0, "ts_s": "b"}]
-        )
-        q = start(land_b, "ckpt_b", ttl_ms=2_000)
-        try:
-            wait_for(lambda: (1, 3.0, "b") in rows)
-            time.sleep(6.0)  # well past the 2 s TTL from id1's admission
-            _write_batch(
-                land_b, "2.json", [{"user_id": 1, "value": 42.0, "ts_s": "f"}]
-            )
-            wait_for(lambda: (1, 42.0, "f") in rows)
-        finally:
-            q.stop()
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-
-
 def test_stream_stream_left_join_emits_unmatched_after_watermark(spark, tmp_path):
     """Matched posts emit with their refresh; posts whose refresh never
     arrived emit with NULL right columns once the watermark passes — the
@@ -856,95 +427,12 @@ def test_stream_stream_left_join_emits_unmatched_after_watermark(spark, tmp_path
     assert got == {(1, 5), (2, None)}
 
 
-def test_stateful_v2_event_time_sessions_match_session_window(spark, tmp_path):
-    """State API v2 EVENT-TIME timers (event_session_closer): on a replayed
-    fixture the operator's closed sessions must equal session_window's
-    Append-mode output row for row — same starts, same end = last+gap, same
-    counts — and, because timers key off the watermark, Trigger.AvailableNow
-    terminates on its own (no processing-time no-data loop)."""
-    from reddit_twitter_big_data_pipeline_spark import protobuf_compat
-    from reddit_twitter_big_data_pipeline_spark.streaming import stateful
-
-    if not protobuf_compat.enable():
-        pytest.skip("no protobuf install and no cloudsdk pure-python bundle")
-
-    land = tmp_path / "land"
-    # u1: one 3-event session crossing the batch boundary, then a second
-    # session; u2: a singleton; u99: the watermark-pushing sentinel.
-    _write_batch(
-        land, "1.json",
-        _rows([(1, "2023-03-25 12:00:00"), (2, "2023-03-25 12:05:00")], user="u1"),
-    )
-    _write_batch(
-        land, "2.json",
-        _rows([(3, "2023-03-25 12:08:00"), (4, "2023-03-25 13:00:00")], user="u1")
-        + _rows([(5, "2023-03-25 12:30:00")], user="u2")
-        + _rows([(9, "2023-03-26 12:00:00")], user="u99"),
-    )
-
-    def src():
-        return _with_ts(
-            streams.read_json_stream(spark, str(land), SCHEMA, max_files_per_trigger=1)
-        )
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        out = stateful.event_session_closer(
-            src(), key_col="username", ts_col="ts", gap_ms=600_000, watermark="0 seconds"
-        )
-        q = (
-            out.writeStream.format("memory").queryName("esc")
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / "ckpt_esc"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            streams.run_to_completion(q)
-        except Exception as e:  # pragma: no cover - environment-dependent
-            pytest.skip(f"RocksDB state store unavailable: {e}")
-        got = {
-            (r.key, r.session_start, r.session_end, r.n)
-            for r in spark.sql("select * from esc").collect()
-            if r.key != "u99"
-        }
-
-        ref = streams.sessionized_counts(
-            src(), ts_col="ts", gap="10 minutes", keys=["username"], watermark="0 seconds"
-        )
-        q2 = (
-            ref.writeStream.format("memory").queryName("swref")
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / "ckpt_sw"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        streams.run_to_completion(q2)
-        expect = {
-            (r.username, r.session_start, r.session_end, r.n)
-            for r in spark.sql("select * from swref").collect()
-            if r.username != "u99"
-        }
-        assert expect, "fixture must close at least one session_window row"
-        assert got == expect
-        # the cross-batch merge really happened: u1's first session has 3 events
-        assert any(k == "u1" and n == 3 for k, _s, _e, n in got)
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-
-
 def test_stream_upsert_into_manifested_store(spark, tmp_path):
     """Streaming micro-batches MERGE into the manifest-committed table:
     batches land as committed snapshots (read_manifested sees the merged
-    state), later batches upsert over earlier ones, and re-running the
-    query against the same checkpoint replays nothing (exactly-once)."""
+    state), later batches upsert over earlier ones, re-running the query
+    against the same checkpoint replays nothing (exactly-once), and a new
+    file then commits only its own rows."""
     from reddit_twitter_big_data_pipeline_spark.sinks import writers
 
     land, target, ckpt = tmp_path / "land", str(tmp_path / "tbl"), str(tmp_path / "ckpt")
@@ -981,6 +469,20 @@ def test_stream_upsert_into_manifested_store(spark, tmp_path):
     run()
     assert writers._manifest_versions(fs, spark._jvm, target) == v_before
     assert {(r.id, r.date, r.username) for r in writers.read_manifested(spark, target).collect()} == got
+
+    # a new file lands -> one commit that adds or upserts only its rows
+    _write_batch(
+        land, "3.json",
+        [{"id": 3, "date": "c", "username": "u1"},  # upsert of id 3
+         {"id": 4, "date": "c", "username": "u2"}],
+    )
+    os.utime(str(land / "3.json"), (base + 2, base + 2))
+    assert sum(p.numInputRows for p in run().recentProgress) == 2
+    v_after = writers._manifest_versions(fs, spark._jvm, target)
+    assert [v for v in v_after if v not in v_before] == [v_before[-1] + 1]
+    assert {(r.id, r.date, r.username) for r in writers.read_manifested(spark, target).collect()} == {
+        (1, "a", "u1"), (2, "b", "u2"), (3, "c", "u1"), (4, "c", "u2")
+    }
 
 
 def test_kmv_stream_folds_batches_and_replays_idempotently(spark, tmp_path):
@@ -1031,6 +533,52 @@ def test_kmv_stream_folds_batches_and_replays_idempotently(spark, tmp_path):
     shutil.rmtree(ckpt)
     run()
     assert sorted(map(tuple, spark.read.parquet(tgt).collect())) == before
+
+
+def test_kmv_stream_unreadable_sketch_raises_and_keeps_files(spark, tmp_path):
+    """A stored sketch that exists but cannot be read is not a first batch:
+    the fold raises and leaves every sketch file byte-identical, instead of
+    swapping the batch's own sketch in over the stored one."""
+    import hashlib
+
+    land, sketch = tmp_path / "land", tmp_path / "sketch"
+    tgt, ckpt = str(sketch), str(tmp_path / "ckpt")
+    schema = T.StructType([T.StructField("user", T.LongType())])
+    land.mkdir()
+
+    def land_users(users):
+        spark.createDataFrame([(u,) for u in users], schema).coalesce(1).write.mode(
+            "append"
+        ).parquet(str(land))
+
+    def run():
+        streams.run_to_completion(
+            streams.kmv_stream(
+                streams.read_parquet_stream(spark, str(land), schema, max_files_per_trigger=1),
+                "user", tgt, ckpt, k=256,
+            )
+        )
+
+    def files():
+        return {
+            str(p.relative_to(sketch)): hashlib.md5(p.read_bytes()).hexdigest()
+            for p in sorted(sketch.rglob("*"))
+            if p.is_file()
+        }
+
+    land_users(range(100))
+    run()
+    for f in sketch.glob("*.parquet"):
+        data = f.read_bytes()
+        f.write_bytes(data[:-8] + b"\0" * 8)  # footer length and magic gone
+    for crc in sketch.glob(".*.crc"):
+        crc.unlink()  # a damaged footer, not a checksum mismatch
+    before = files()
+    assert any(k.endswith(".parquet") for k in before)
+    land_users([1000])
+    with pytest.raises(Exception):
+        run()
+    assert files() == before
 
 
 # ------------------------------------------------- W4 through the Delta seam
