@@ -3,9 +3,10 @@
 Staging (`stage`): a frame that several actions or plan branches read is
 staged once, where it fans out, and every consumer reads the staged rows
 instead of re-running its plan. Without it each branch and each action
-re-runs the whole subtree — the source scan, the pandas enrichment UDFs,
-the text-scoring projections that filter pushdown copies into every
-consumer. The engine stages at three kinds of place:
+re-runs the whole subtree — the source scan, the enrichment (expressions
+by default, pandas UDFs for swapped-in services), the text-scoring
+projections that filter pushdown copies into every consumer. The engine
+stages at three kinds of place:
 - each curation gate that evaluates the staged token machinery, and
   admission's novel rows (`plans/training.py`);
 - the frames the graph branches read: the cleansed, enriched tweets,

@@ -1,18 +1,25 @@
-"""Enrichment layer — SURVEY §2.4 (U1-U3) as Arrow-vectorized pandas UDFs
-with pluggable backends.
+"""Enrichment layer — SURVEY §2.4 (U1-U3): pluggable backends, run as JVM
+Column expressions by default and as Arrow-vectorized pandas UDFs for real
+services.
 
 The reference runs translation, sentiment, and claim scoring as sequential
 driver-side loops over collected pandas frames (reference:
 glue/reddit_glue.py:233-236, 155-180, 187-196) — the 10-worker cluster idles
-while one Python process makes HTTP calls. Here each enrichment is a scalar
-`pandas_udf`: Arrow batches cross the JVM boundary once, the backend runs on
-every executor in parallel, and rate limiting is expressed as partitioning
-(`repartition(n_api_slots)` before the UDF bounds concurrent API clients).
+while one Python process makes HTTP calls.
 
-Backends are injected (BACKENDS registry) so tests are deterministic; the
-HTTP-backed implementations plug into the same seams. Deterministic backends
-are pure functions of the text — re-running a micro-batch reproduces
-identical enrichment (idempotency, W5).
+Backends are injected (BACKENDS registry) so tests are deterministic. The
+default backends are pure functions of the text, and each also has a Spark
+SQL form (`sentiment_hash_sql`, `claim_keyword_sql`; the identity
+translation is no step at all): while a backend is still the default,
+`enrich` runs its form as a JVM expression, so the default path needs no
+Python worker and no Arrow round trip. `tests/test_properties.py` pins each
+form equal to its pandas backend. A backend swapped in with `set_backend`
+(the HTTP services of `functions/http_backends.py`) runs as a scalar
+`pandas_udf`: Arrow batches cross the JVM boundary once, the backend runs
+on every executor in parallel, and rate limiting is expressed as
+partitioning (`repartition(n_api_slots)` before the UDF bounds concurrent
+API clients). Deterministic backends reproduce identical enrichment when a
+micro-batch re-runs (idempotency, W5).
 
 Alignment note: the reference aligns sentiment results to rows POSITIONALLY
 with `index = i*len(batch)+Index`, which is wrong for the final short batch
@@ -123,6 +130,38 @@ BACKENDS: dict[str, Callable] = {
     "sentiment": sentiment_hash,
     "claim": claim_keyword,
 }
+_DEFAULTS = dict(BACKENDS)
+
+
+# --- Column forms of the default backends ----------------------------------
+# Each form is one SQL string, so building it costs one parse instead of a
+# Py4J call per sub-expression. Divisions are by DOUBLE literals (`3.0D`):
+# a bare `3.0` is a DECIMAL in Spark SQL, and its quotients drift from the
+# IEEE doubles the pandas backends return.
+
+
+def sentiment_hash_sql(text_col: str) -> list[str]:
+    """`sentiment_hash` as four select items, Positive, Negative, Neutral
+    and Mixed: the first four md5 bytes of the UTF-8 text, each +1, over
+    their sum. NULL and "" score (0, 0, 1, 0)."""
+    t = f"`{text_col}`"
+    b = [f"CAST(conv(substr(md5({t}), {2 * i + 1}, 2), 16, 10) AS INT) + 1" for i in range(4)]
+    total = " + ".join(b)
+    return [
+        f"CASE WHEN {t} IS NULL OR {t} = '' THEN {empty} "
+        f"ELSE CAST({b[i]} AS DOUBLE) / CAST({total} AS DOUBLE) END AS {name}"
+        for i, (name, empty) in enumerate(
+            zip(SENTIMENT_SCHEMA.names, ("0.0D", "0.0D", "1.0D", "0.0D"))
+        )
+    ]
+
+
+def claim_keyword_sql(text_col: str) -> str:
+    """`claim_keyword` as one SQL expression: the marker words present in
+    lower(text), over 3, capped at 1. NULL and "" score 0.0."""
+    t = f"`{text_col}`"
+    hits = " + ".join(f"CAST(instr(lower({t}), '{w}') > 0 AS INT)" for w in _CLAIM_WORDS)
+    return f"CASE WHEN {t} IS NULL THEN 0.0D ELSE least(1.0D, ({hits}) / 3.0D) END"
 
 
 def set_backend(kind: str, fn: Callable) -> None:
@@ -326,22 +365,33 @@ def enrich(
     claim: bool = True,
     api_slots: int | None = None,
 ) -> DataFrame:
-    """U1→U2→U3 in one plan stage. `api_slots` bounds concurrent backend
-    clients by repartitioning before the UDFs (rate-limit backpressure,
-    SURVEY §4 custom piece (a)); with no explicit slot count, small scans
+    """U1→U2→U3 in one plan stage. A step whose backend is still the
+    default is its Column form (the identity translation adds nothing); a
+    step whose backend was swapped by `set_backend` is its pandas UDF.
+    Only when a UDF remains does the frame repartition first: `api_slots`
+    bounds the concurrent backend clients (rate-limit backpressure, SURVEY
+    §4 custom piece (a)), and with no explicit slot count small scans
     spread to the session's parallelism so the Arrow UDF stage never runs
     on the 1-2 partitions a few-MB parquet file arrives as."""
     from ..parallel import spread
 
-    out = df.repartition(api_slots) if api_slots else spread(df)
-    if translate:
+    wanted = {"translate": translate, "sentiment": sentiment, "claim": claim}
+    udfs = {k for k, on in wanted.items() if on and BACKENDS[k] is not _DEFAULTS[k]}
+    out = df
+    if udfs:
+        out = df.repartition(api_slots) if api_slots else spread(df)
+    if "translate" in udfs:
         out = out.withColumn(text_col, translate_udf()(F.col(text_col)))
-    if sentiment:
+    if "sentiment" in udfs:
         out = out.withColumn("__s", sentiment_udf()(F.col(text_col))).select(
             "*", "__s.Positive", "__s.Negative", "__s.Neutral", "__s.Mixed"
         ).drop("__s")
-    if claim:
+    elif sentiment:
+        out = out.selectExpr("*", *sentiment_hash_sql(text_col))
+    if "claim" in udfs:
         out = out.withColumn("claimScore", claim_udf()(F.col(text_col)))
+    elif claim:
+        out = out.withColumn("claimScore", F.expr(claim_keyword_sql(text_col)))
     return out
 
 

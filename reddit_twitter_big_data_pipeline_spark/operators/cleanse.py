@@ -32,11 +32,13 @@ def filter_time_range(df: DataFrame, ts_col: str, start, end) -> DataFrame:
 
 
 def scrub_empty(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
+    """One filter: a row survives only with every `cols` value non-null and
+    non-empty (the reference's NaN replacement only marks rows for its
+    dropna, so nothing else changes)."""
     cols = cols or [f.name for f in df.schema.fields if f.dataType.typeName() == "string"]
-    out = df
-    for c in cols:
-        out = out.withColumn(c, F.when(F.col(c) == "", None).otherwise(F.col(c)))
-    return out.na.drop(how="any", subset=cols)
+    if not cols:
+        return df
+    return df.filter(" AND ".join(f"`{c}` IS NOT NULL AND `{c}` != ''" for c in cols))
 
 
 # F3 — sentinel scrub (reference: glue/reddit_glue.py:239-252): "[deleted]"
@@ -49,14 +51,16 @@ USERNAME_SENTINELS = ("", "None")
 def scrub_sentinels(
     df: DataFrame, content_col: str = "content", user_col: str = "username"
 ) -> DataFrame:
-    out = df.withColumn(
-        content_col,
-        F.when(F.col(content_col).isin(*CONTENT_SENTINELS), None).otherwise(F.col(content_col)),
-    ).withColumn(
-        user_col,
-        F.when(F.col(user_col).isin(*USERNAME_SENTINELS), None).otherwise(F.col(user_col)),
+    """One filter: rows whose content or username is null or a sentinel
+    drop; the surviving rows are unchanged."""
+
+    def kept(c: str, sentinels: tuple[str, ...]) -> str:
+        listed = ", ".join(f"'{v}'" for v in sentinels)
+        return f"`{c}` IS NOT NULL AND `{c}` NOT IN ({listed})"
+
+    return df.filter(
+        f"{kept(content_col, CONTENT_SENTINELS)} AND {kept(user_col, USERNAME_SENTINELS)}"
     )
-    return out.na.drop(subset=[content_col]).na.drop(subset=[user_col])
 
 
 # F4 — bot-author filter (reference: reddit/lambda_function.py:60-61).

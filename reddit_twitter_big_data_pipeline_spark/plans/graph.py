@@ -7,50 +7,56 @@ engine represents the same graph as two DataFrames:
     nodes(node_id, label, props map<string,string>)
     edges(src, dst, rel_type)
 
-Every Cypher MERGE becomes distinct/dropDuplicates on the natural key; every
-MATCH becomes an inner join; the mentions FOREACH fan-out becomes
-explode(split(...)). Graph queries downstream are joins/aggregations — the
-reference has no query that needs more (SURVEY §1.1).
+Each source row emits all its node rows (and, separately, all its edge
+rows) at once: one `inline` over an array of structs, with the mentions
+FOREACH fan-out as a `transform` over the mentions array. Rows with a null
+key drop, and every Cypher MERGE of an output becomes ONE dropDuplicates on
+its natural key: one shuffle per output. Every MATCH becomes an inner join.
+Graph queries downstream are joins/aggregations — the reference has no
+query that needs more (SURVEY §1.1). Each emitter is one SQL expression, so
+a plan costs a handful of Py4J calls to build.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..operators import cleanse, model
+from ..operators import model
+
+_NO_PROPS = "CAST(map() AS MAP<STRING, STRING>)"
+_NODE_KEY = ["node_id", "label"]
+_EDGE_KEY = ["src", "dst", "rel_type"]
 
 
-def _props(df: DataFrame, cols: list[str]) -> F.Column:
+def _props(cols: list[str]) -> str:
     """Pack payload columns into the props map (stringly, like the property
     graph; numeric re-casts happen at read via map_get + cast)."""
-    pairs = []
-    for c in cols:
-        pairs.extend([F.lit(c), F.col(c).cast("string")])
-    return F.create_map(*pairs)
+    return "map(" + ", ".join(f"'{c}', CAST(`{c}` AS STRING)" for c in cols) + ")"
 
 
-def _nodes(df: DataFrame, id_col: F.Column, label: str, prop_cols: list[str]) -> DataFrame:
+def _node(key: str, label: str, props: str = _NO_PROPS) -> str:
+    return f"named_struct('node_id', CAST({key} AS STRING), 'label', '{label}', 'props', {props})"
+
+
+def _edge(src: str, dst: str, rel: str) -> str:
     return (
-        df.select(
-            id_col.cast("string").alias("node_id"),
-            F.lit(label).alias("label"),
-            _props(df, prop_cols).alias("props"),
-        )
-        .filter(F.col("node_id").isNotNull())
-        .dropDuplicates(["node_id", "label"])
+        f"named_struct('src', CAST({src} AS STRING), 'dst', CAST({dst} AS STRING), "
+        f"'rel_type', '{rel}')"
     )
 
 
-def _edges(df: DataFrame, src: F.Column, dst: F.Column, rel: str) -> DataFrame:
-    return (
-        df.select(
-            src.cast("string").alias("src"),
-            dst.cast("string").alias("dst"),
-            F.lit(rel).alias("rel_type"),
-        )
-        .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
-        .dropDuplicates(["src", "dst", "rel_type"])
-    )
+def _emit(df: DataFrame, rows: list[str], fanout: str = "") -> DataFrame:
+    """One output row per struct in `rows`, plus one per element of the
+    `fanout` array (null/empty arrays emit none)."""
+    arr = f"array({', '.join(rows)})"
+    return df.selectExpr(f"inline(concat({arr}, {fanout}))" if fanout else f"inline({arr})")
+
+
+def _merge(keys: list[str], *emitted: DataFrame) -> DataFrame:
+    """The Cypher MERGE of one output: null keys drop, then one
+    dropDuplicates on the natural key."""
+    out = model.union_sources(*emitted)
+    return out.filter(" AND ".join(f"{k} IS NOT NULL" for k in keys)).dropDuplicates(keys)
 
 
 def reddit_graph(posts: DataFrame, comments: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -65,8 +71,8 @@ def reddit_graph(posts: DataFrame, comments: DataFrame) -> tuple[DataFrame, Data
     sentiment into every comment (reference: glue/reddit_glue.py:122-124,
     documented bug, SURVEY §3.2) — comments keep their own enrichment here.
     """
-    post_props = [c for c in posts.columns if c != "id"]
-    comment_props = [c for c in comments.columns if c != "id"]
+    post_props = _props([c for c in posts.columns if c != "id"])
+    comment_props = _props([c for c in comments.columns if c != "id"])
     # MATCH-drop semantics: the reference's comment Cypher MERGEs the comment
     # node, its user node, and both edges in ONE query that starts with
     # `MATCH (p1:Post_Reddit {id: $postId})` — an orphaned comment therefore
@@ -75,19 +81,18 @@ def reddit_graph(posts: DataFrame, comments: DataFrame) -> tuple[DataFrame, Data
         comments, posts.select(F.col("id").alias("p_id")), "post_id", "p_id"
     )
 
-    nodes = model.union_sources(
-        _nodes(posts, F.col("id"), "Post_Reddit", post_props),
-        _nodes(attached, F.col("id"), "Comment_Reddit", comment_props),
-        _nodes(posts.select(F.col("username")), F.col("username"), "User_Reddit", []),
-        _nodes(attached.select(F.col("username")), F.col("username"), "User_Reddit", []),
-        _nodes(posts.select(F.col("subreddit")), F.col("subreddit"), "Subreddit_Reddit", []),
-    ).dropDuplicates(["node_id", "label"])
-
-    edges = model.union_sources(
-        _edges(posts, F.col("id"), F.col("subreddit"), "POSTED_IN"),
-        _edges(posts, F.col("id"), F.col("username"), "POSTED_BY"),
-        _edges(attached, F.col("id"), F.col("p_id"), "COMMENTED_ON"),
-        _edges(attached, F.col("id"), F.col("username"), "COMMENTED_BY"),
+    nodes = _merge(
+        _NODE_KEY,
+        _emit(posts, [_node("id", "Post_Reddit", post_props), _node("username", "User_Reddit"),
+                      _node("subreddit", "Subreddit_Reddit")]),
+        _emit(attached, [_node("id", "Comment_Reddit", comment_props),
+                         _node("username", "User_Reddit")]),
+    )
+    edges = _merge(
+        _EDGE_KEY,
+        _emit(posts, [_edge("id", "subreddit", "POSTED_IN"), _edge("id", "username", "POSTED_BY")]),
+        _emit(attached, [_edge("id", "p_id", "COMMENTED_ON"),
+                         _edge("id", "username", "COMMENTED_BY")]),
     )
     return nodes, edges
 
@@ -97,33 +102,22 @@ def twitter_graph(tweets: DataFrame) -> tuple[DataFrame, DataFrame]:
 
     The Cypher FOREACH-over-SPLIT (reference: glue/twitter_glue.py:92-94) and
     the loader's 4-way null dispatch (reference:
-    neo4j_insert/neo4j_twitter_insert.py:60-82) collapse into explode(), which
-    emits zero rows for null/empty arrays. Expects `mentionedUsers` already
-    parsed to array (cleanse.parse_mentions).
+    neo4j_insert/neo4j_twitter_insert.py:60-82) collapse into a transform
+    over the mentions array, which emits zero rows for null/empty arrays and
+    drops empty names. Expects `mentionedUsers` already parsed to array
+    (cleanse.parse_mentions).
     """
-    tweet_props = [c for c in tweets.columns if c not in ("id", "mentionedUsers")]
-    mentions = cleanse.explode_mentions(tweets)
-
-    nodes = model.union_sources(
-        _nodes(tweets, F.col("id"), "Tweet", tweet_props),
-        _nodes(tweets.select(F.col("username")), F.col("username"), "User_Twitter", []),
-        _nodes(mentions.select(F.col("mentioned_user")), F.col("mentioned_user"), "User_Twitter", []),
-        _nodes(
-            tweets.filter(F.col("inReplyToUser").isNotNull()).select(F.col("inReplyToUser")),
-            F.col("inReplyToUser"),
-            "User_Twitter",
-            [],
-        ),
-    ).dropDuplicates(["node_id", "label"])
-
-    edges = model.union_sources(
-        _edges(tweets, F.col("id"), F.col("username"), "POSTED_BY"),
-        _edges(mentions, F.col("id"), F.col("mentioned_user"), "MENTIONS"),
-        _edges(
-            tweets.filter(F.col("inReplyToUser").isNotNull()),
-            F.col("id"),
-            F.col("inReplyToUser"),
-            "IN_REPLY_TO",
-        ),
-    )
+    tweet_props = _props([c for c in tweets.columns if c not in ("id", "mentionedUsers")])
+    mentioned = "transform(filter(coalesce(mentionedUsers, array()), m -> m != ''), m -> {})"
+    nodes = _merge(_NODE_KEY, _emit(
+        tweets,
+        [_node("id", "Tweet", tweet_props), _node("username", "User_Twitter"),
+         _node("inReplyToUser", "User_Twitter")],
+        mentioned.format(_node("m", "User_Twitter")),
+    ))
+    edges = _merge(_EDGE_KEY, _emit(
+        tweets,
+        [_edge("id", "username", "POSTED_BY"), _edge("id", "inReplyToUser", "IN_REPLY_TO")],
+        mentioned.format(_edge("id", "m", "MENTIONS")),
+    ))
     return nodes, edges

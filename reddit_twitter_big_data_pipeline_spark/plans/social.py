@@ -69,13 +69,14 @@ def twitter_pipeline(
     """The flagship path (SURVEY §3.1), distributed end-to-end.
 
     cleanse: sentinel scrub (F3) → length guard (F5) → blocklist (F6) →
-    mentions parse (T1) — then enrich (U1-U3 pandas_udfs) — then graph model
-    (K5/K6 as distinct + explode). Returns (nodes, edges).
+    mentions parse (T1) — then enrich (U1-U3; Column expressions with the
+    default backends) — then graph model (K5/K6: one inline emitter and one
+    dedupe per output). Returns (nodes, edges).
 
-    The graph reads the cleansed tweets in seven branches, and a commit
-    runs several actions over each output, so the tweets are staged
+    The graph reads the cleansed tweets twice (nodes and edges), and a
+    commit runs several actions over each output, so the tweets are staged
     (`checkpointing.stage`) before the graph: the scan and the enrichment
-    run once per commit, not once per branch and action.
+    run once per commit, not once per output and action.
     """
     df = cleanse.scrub_sentinels(tweets_raw)
     df = cleanse.filter_length(df, ["content"], 1000)
@@ -98,7 +99,7 @@ def reddit_pipeline(
     Unlike the reference, comments are scrubbed/enriched with their OWN
     values (the reference leaks the last post's enrichment into every
     comment — reference: glue/reddit_glue.py:122-124, documented bug).
-    Posts and comments are each staged before the graph's branches, as in
+    Posts and comments are each staged before the graph, as in
     `twitter_pipeline`.
     """
 

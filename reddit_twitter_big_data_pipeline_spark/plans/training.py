@@ -54,16 +54,17 @@ _LABELS = ("lang", "domain")
 # Barrier placement: the curation stack stages (`checkpointing.stage`,
 # which states the rule and its fault-tolerance trade-off) right after each
 # gate that evaluates the staged token machinery — the scrub projection,
-# the scored langid projection and the quality filter — and once more over
-# admission's novel rows, which feed several consumers. Catalyst pushes a
-# filter through a projection by SUBSTITUTING the projected expressions
-# into the condition, and every extra reference of a subtree (an anti-join
-# side, a window, a quota join) repeats it, so without the cut the text
-# scoring re-runs per reference (BASELINE.md r10: the v3 barrier measured
-# 0.56x of the barrier-less plan, rows identical). The `repetition` gate
-# has none: its fold is still substituted into its filter.
-# `tests/test_plans.py` pins each curation query's barrier count and plan
-# shape.
+# the scored langid projection, the quality filter and the repetition
+# fold — and once more over admission's novel rows, which feed several
+# consumers. Catalyst pushes a filter through a projection by SUBSTITUTING
+# the projected expressions into the condition, and every extra reference
+# of a subtree (an anti-join side, a window, a quota join) repeats it, so
+# without the cut the text scoring re-runs per reference (BASELINE.md r10:
+# the v3 barrier measured 0.56x of the barrier-less plan, rows identical;
+# CHANGES.md: the repetition barrier took train_curation_v3's optimized
+# plan from 15 regexp_replace copies to 1, and its sf0.1 time from 7.6 to
+# 5.1 s). `tests/test_plans.py` pins each curation query's barrier count
+# and plan shape.
 
 
 def _gated(df: DataFrame, gates: list[Gate], c: _Cols) -> DataFrame:
@@ -171,8 +172,8 @@ def repetition(
             return F.floor(F.col(col) * F.lit(1_000_000.0)).cast("long")
 
         return (
-            text_ops.repetition_signals(
-                df, col=c.text, id_col=c.id, keep=_keep_but(df, c)
+            checkpointing.stage(
+                text_ops.repetition_signals(df, col=c.text, id_col=c.id, keep=_keep_but(df, c))
             )
             .filter(
                 (micro("dup_line_frac") <= F.lit(dup_line_micro_max))

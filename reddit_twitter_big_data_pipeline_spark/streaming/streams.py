@@ -499,9 +499,9 @@ def graph_stream(
     from ..sinks.graph_sink import write_graph
 
     def _serve(batch: DataFrame, batch_id: int) -> None:
-        # twitter_graph references the batch across ~7 union branches and the
-        # sink runs two actions — stage it once or every branch re-reads the
-        # micro-batch's source files
+        # twitter_graph reads the batch twice (nodes and edges) and the sink
+        # runs two actions — stage it once or each re-reads the micro-batch's
+        # source files
         batch = checkpointing.stage(batch)
         if batch.isEmpty():
             return

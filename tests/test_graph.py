@@ -7,9 +7,10 @@ import glob
 import json
 import os
 
-from reddit_twitter_big_data_pipeline_spark import schemas
+from reddit_twitter_big_data_pipeline_spark import checkpointing, schemas
+from reddit_twitter_big_data_pipeline_spark.functions import enrich
 from reddit_twitter_big_data_pipeline_spark.operators import cleanse
-from reddit_twitter_big_data_pipeline_spark.plans import graph, social
+from reddit_twitter_big_data_pipeline_spark.plans import audit, graph, social
 from reddit_twitter_big_data_pipeline_spark.sinks import writers
 from reddit_twitter_big_data_pipeline_spark.sources import readers
 
@@ -110,6 +111,57 @@ def test_idempotent_rerun_same_graph(spark):
         enrichment=False,
     )
     assert sorted(map(tuple, edges_twice.collect())) == sorted(map(tuple, edges_once.collect()))
+
+
+def _scan(spark, root: str, rows: list, cols: list[str], schema):
+    """`rows` landed as one JSON-array file and read back the way the daily
+    job reads its sources, so the plan sees file sizes."""
+    d = f"{root}/topic=t/dataload=d1"
+    os.makedirs(d)
+    with open(f"{d}/part-0.json", "w") as f:
+        json.dump([dict(zip(cols, r)) for r in rows], f)
+    return readers.read_partitioned_json(spark, root, schema, dataload="d1")
+
+
+def test_daily_plan_one_shuffle_per_output_and_no_python_worker(spark, tmp_path, monkeypatch):
+    """The daily plan's shape: over the staged, enriched inputs each graph
+    output plans exactly one shuffle (its MERGE dedupe), and with the
+    default backends enrichment plans no Python UDF node; a backend swapped
+    in with set_backend brings its pandas UDF back."""
+    tweets = _scan(spark, str(tmp_path / "tweets"), TWEETS, TWEET_COLS, schemas.TWEETS)
+    posts = _scan(spark, str(tmp_path / "posts"), POSTS, POST_COLS, schemas.REDDIT_POSTS)
+    comments = _scan(
+        spark, str(tmp_path / "comments"), COMMENTS, COMMENT_COLS, schemas.REDDIT_COMMENTS
+    )
+    staged = []
+    stage = checkpointing.stage
+
+    def capture(df):
+        staged.append(df)
+        return stage(df)
+
+    monkeypatch.setattr(checkpointing, "stage", capture)
+
+    def build():
+        staged.clear()
+        return [*social.twitter_pipeline(tweets), *social.reddit_pipeline(posts, comments)]
+
+    def udf_nodes():
+        return [
+            audit.count_operator(df, "ArrowEvalPython") + audit.count_operator(df, "BatchEvalPython")
+            for df in staged
+        ]
+
+    outputs = build()
+    assert [len(audit.shuffle_exchanges(o)) for o in outputs] == [1, 1, 1, 1]
+    assert udf_nodes() == [0, 0, 0]  # tweets, posts, comments
+    saved = enrich.BACKENDS["sentiment"]
+    try:
+        enrich.set_backend("sentiment", enrich.retrying_backend(enrich.sentiment_hash))
+        build()
+        assert all(n > 0 for n in udf_nodes()) and len(staged) == 3
+    finally:
+        enrich.set_backend("sentiment", saved)
 
 
 def _next_execution_id(spark) -> int:

@@ -252,7 +252,7 @@ def test_round4_queries_cartesian_free(spark, sf_dir, entry):
 CURATION_PLAN_SHAPES = {
     "train_curation": (1, 2, 2, 1),
     "train_curation_v2": (2, 2, 4, 1),
-    "train_curation_v3": (2, 2, 4, 15),
+    "train_curation_v3": (3, 2, 4, 1),
     "train_curation_increment": (3, 1, 3, 0),
     "train_curation_increment_v2": (3, 2, 5, 0),
 }

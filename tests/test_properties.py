@@ -5,9 +5,12 @@ round-trip."""
 
 from __future__ import annotations
 
-from hypothesis import given, settings, strategies as st
+import pandas as pd
+from hypothesis import example, given, settings, strategies as st
 
+from reddit_twitter_big_data_pipeline_spark.functions import enrich
 from reddit_twitter_big_data_pipeline_spark.operators import dedup, text as text_ops
+from reddit_twitter_big_data_pipeline_spark.plans import audit
 from reddit_twitter_big_data_pipeline_spark.sources import ingest
 
 _WORDS = st.sampled_from(["alpha", "beta", "gamma", "delta", "eps", "zeta"])
@@ -839,3 +842,40 @@ def test_temperature_weights_invariants(spark, counts, alpha, target):
             assert contrib[a] <= contrib[b] + 1e-6 * max(t, 1.0)
     if alpha == 1.0 and target is None:
         assert all(v == 1.0 for v in w.values())
+
+
+# claim_keyword's marker words, each letter upper- or lower-case at random
+_MARKER = st.sampled_from(enrich._CLAIM_WORDS).flatmap(
+    lambda w: st.lists(st.booleans(), min_size=len(w), max_size=len(w)).map(
+        lambda up: "".join(c.upper() if u else c for c, u in zip(w, up))
+    )
+)
+_POST = st.one_of(
+    st.none(),
+    st.just(""),
+    st.lists(st.one_of(st.text(max_size=12), _MARKER), max_size=6).map("".join),
+)
+
+
+@settings(max_examples=12, deadline=None)
+@given(st.lists(_POST, min_size=1, max_size=16))
+@example([
+    None, "", "Привет, мир: 40 ПРОЦЕНТОВ", "😀🔥 KILL count 💀", "İstanbul offİcial İ",
+    "\u212aill the data", "ΟΔΥΣΣΕΥΣ ΣΑΣ report", "x" * 500,
+])
+def test_enrich_column_forms_equal_pandas_backends(spark, texts):
+    """With the default backends `enrich` runs their Column forms; each
+    equals its pandas backend exactly (`==` on the doubles), and the
+    identity translation leaves the text alone. The plan carries no Arrow
+    UDF, so the forms, not the backends, are what is compared."""
+    df = spark.createDataFrame(list(enumerate(texts)), "id INT, content STRING")
+    out = enrich.enrich(df)
+    assert audit.count_operator(out, "ArrowEvalPython") == 0
+    got = {r.id: r for r in out.collect()}
+    sent = enrich.sentiment_hash(pd.Series(texts, dtype=object))
+    claim = enrich.claim_keyword(pd.Series(texts, dtype=object))
+    for i, t in enumerate(texts):
+        r = got[i]
+        assert r.content == t
+        assert (r.Positive, r.Negative, r.Neutral, r.Mixed) == tuple(sent.iloc[i]), t
+        assert r.claimScore == claim.iloc[i], t
