@@ -675,8 +675,8 @@ def sessionize_batch(
     id_col: str = "event_id",
     gap_minutes: int = 30,
 ) -> DataFrame:
-    """Batch gap-based sessionization — the offline twin of the streaming
-    W6 sessions (`streams.sessionized_counts`), for backfills and
+    """Batch gap-based sessionization — the offline twin of the W6
+    `session_window` sessions (the `w6_sessionize` query), for backfills and
     historical re-sessionization: a new session starts wherever a user's
     inter-event gap exceeds `gap_minutes`. The classic window
     composition: lag → gap flag → running sum of flags = session

@@ -113,8 +113,9 @@ def filter_blocklist(df: DataFrame, cols: list[str], terms: list[str]) -> DataFr
 
 
 # ---------------------------------------------------------------------------
-# T1/T2 — array⇄CSV and explode (reference: twitter/lambda_function.py:36
-# joins with ","; glue/twitter_glue.py:92 re-splits in Cypher).
+# T1 — array⇄CSV (reference: twitter/lambda_function.py:36 joins with ",";
+# glue/twitter_glue.py:92 re-splits in Cypher). The T2 mention fan-out is a
+# `transform` inside the graph model's emitter (plans/graph.py).
 
 
 def parse_mentions(df: DataFrame, col: str = "mentionedUsers") -> DataFrame:
@@ -130,15 +131,6 @@ def parse_mentions(df: DataFrame, col: str = "mentionedUsers") -> DataFrame:
 def mentions_to_csv(col: str = "mentionedUsers") -> Column:
     """Legacy-format boundary: array → comma-joined string."""
     return F.when(F.size(F.col(col)) == 0, F.lit(None)).otherwise(F.concat_ws(",", F.col(col)))
-
-
-def explode_mentions(df: DataFrame, id_col: str = "id", col: str = "mentionedUsers") -> DataFrame:
-    """T2: one row per (id, mentioned_user). Null/empty arrays yield zero
-    rows — this single expression replaces the reference's 4-way null
-    dispatch (reference: neo4j_insert/neo4j_twitter_insert.py:60-82)."""
-    return df.select(F.col(id_col), F.explode(F.col(col)).alias("mentioned_user")).filter(
-        F.col("mentioned_user") != ""
-    )
 
 
 # T3 — partition label (reference: glue/reddit_glue.py:60).

@@ -136,10 +136,10 @@ def _swap_into_place(spark: SparkSession, target_path: str, staging_path: str) -
 def replace_table(spark: SparkSession, target_path: str, df: DataFrame) -> None:
     """Crash-safe full replacement of the parquet table at `target_path`
     with `df`, for callers whose plan READS the current table
-    (`merge_upsert`, `compact_table`, the streaming KMV fold: new state =
-    f(old state, batch)). The plan is fully written to staging while the
-    old files are intact, then swapped; a plain overwrite would delete the
-    very files the plan is still reading."""
+    (`merge_upsert`, `compact_table`: new state = f(old state, batch)). The
+    plan is fully written to staging while the old files are intact, then
+    swapped; a plain overwrite would delete the very files the plan is
+    still reading."""
     recover_interrupted_swap(spark, target_path)
     staging = target_path + ".__staging__"
     df.write.mode("overwrite").parquet(staging)
@@ -271,59 +271,16 @@ def merge_upsert_partitioned(
     partition either old or new — never missing beyond the window that
     `recover_partition_swaps` heals on the next call — and never corrupts
     an untouched partition.
-    """
-
-    def combine(base, upd):
-        return _last_writer_wins(base, upd, keys, order_col)
-
-    return _merge_partition_scoped(spark, target_path, updates, partition_cols, combine)
-
-
-def _touched_partitions(updates: DataFrame, partition_cols: list[str]):
-    """The partition-pruning step both scoped merges share. Returns
-    (staged updates, predicate over the touched partitions), or
-    (staged updates, None) when `updates` has no rows. The collect of the
-    touched partition values and the merge's staged write both read
-    `updates`, so it is staged (`checkpointing.stage`) to run its plan
-    once. The values are bounded by contract: one update batch touches
-    few partitions, which is the whole point of a scoped merge."""
-    updates = checkpointing.stage(updates)
-    touched = [r.asDict() for r in updates.select(*partition_cols).distinct().collect()]
-    if not touched:
-        return updates, None
-    pred = F.lit(False)
-    for part in touched:
-        clause = F.lit(True)
-        for c in partition_cols:
-            v = part[c]
-            clause = clause & (F.col(c).isNull() if v is None else (F.col(c) == F.lit(v)))
-        pred = pred | clause
-    return updates, pred
-
-
-def _merge_partition_scoped(
-    spark: SparkSession,
-    target_path: str,
-    updates: DataFrame,
-    partition_cols: list[str],
-    combine,
-) -> DataFrame:
-    """Shared core of the partition-scoped writers: heal prior crashes, find
-    the partitions `updates` touches, read ONLY those (partition pruning),
-    hand (base_slice | None, updates) to `combine`, stage its result, and
-    swap each touched partition dir in via two renames (displaced originals
-    parked under `<target>.__pbackup__`, outside the table root). Untouched
-    partitions are never read, rewritten, or moved.
 
     No rows means no commit: an existing table is left as it is, and with
-    no table yet nothing is left on disk and the empty `combine` result is
-    returned."""
+    no table yet nothing is left on disk and the empty result is returned.
+    """
     jvm = spark._jvm
     recover_partition_swaps(spark, target_path, len(partition_cols))
     fs, tgt = _hadoop_fs(spark, target_path)
 
     if not fs.exists(tgt):
-        first = combine(None, updates)
+        first = _last_writer_wins(None, updates, keys, order_col)
         first.write.mode("overwrite").partitionBy(*partition_cols).parquet(target_path)
         if not _list_partition_dirs(fs, jvm, tgt, len(partition_cols)):
             fs.delete(tgt, True)
@@ -335,7 +292,9 @@ def _merge_partition_scoped(
     updates, touched = _touched_partitions(updates, partition_cols)
     if touched is None:
         return spark.read.parquet(target_path)
-    result = combine(spark.read.parquet(target_path).filter(touched), updates)
+    result = _last_writer_wins(
+        spark.read.parquet(target_path).filter(touched), updates, keys, order_col
+    )
 
     # 2. stage the merged slice fully (old files still intact → the plan can
     #    read them to the end), then swap each touched partition dir
@@ -365,6 +324,29 @@ def _merge_partition_scoped(
         fs.delete(broot, True)
     fs.delete(sroot, True)
     return spark.read.parquet(target_path)
+
+
+def _touched_partitions(updates: DataFrame, partition_cols: list[str]):
+    """The partition-pruning step the partition-scoped merge and the
+    manifested merge share. Returns (staged updates, predicate over the
+    touched partitions), or (staged updates, None) when `updates` has no
+    rows. The collect of the touched partition values and the merge's
+    staged write both read `updates`, so it is staged
+    (`checkpointing.stage`) to run its plan once. The values are bounded by
+    contract: one update batch touches few partitions, which is the whole
+    point of a scoped merge."""
+    updates = checkpointing.stage(updates)
+    touched = [r.asDict() for r in updates.select(*partition_cols).distinct().collect()]
+    if not touched:
+        return updates, None
+    pred = F.lit(False)
+    for part in touched:
+        clause = F.lit(True)
+        for c in partition_cols:
+            v = part[c]
+            clause = clause & (F.col(c).isNull() if v is None else (F.col(c) == F.lit(v)))
+        pred = pred | clause
+    return updates, pred
 
 
 # --- manifest-committed tables (reader-safe MERGE) --------------------------
@@ -410,8 +392,8 @@ def _manifest_versions(fs, jvm, root: str) -> list[int]:
 
 
 def _read_bytes(fs, jvm, path) -> bytes:
-    """All bytes of the small Hadoop-FS file at `path` (a manifest, a
-    stream marker), read in one JVM call."""
+    """All bytes of the small Hadoop-FS file at `path` (a manifest), read
+    in one JVM call."""
     stream = fs.open(path)
     try:
         return bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
@@ -703,52 +685,6 @@ def vacuum_manifested(spark: SparkSession, target_path: str, n_partition_cols: i
                 fs.delete(st.getPath(), True)
                 removed += 1
     return removed
-
-
-def merge_aggregate_partitioned(
-    spark: SparkSession,
-    target_path: str,
-    partials: DataFrame,
-    group_keys: list[str],
-    sum_cols: list[str],
-    partition_cols: list[str],
-) -> DataFrame:
-    """Incremental rollup maintenance (continuous-aggregate refresh): fold a
-    batch of PARTIAL aggregates into a stored aggregate table, rewriting
-    only the partitions the batch touches — the incremental form of the
-    reference's daily T+1 analytics rollup (reference: the daily Glue
-    aggregation jobs, terraform/main.tf:423,433): instead of recomputing
-    the day's aggregates from all events, each batch folds its partial
-    sums into the stored table at a cost proportional to the batch.
-
-    Contract: `sum_cols` must be ADDITIVE partials (sums/counts — the
-    decomposable-aggregate property). Non-additive measures derive
-    downstream (avg = sum/count; distinct via the HLL sketches in
-    operators.sketches). `partials` must already be aggregated by
-    `group_keys` (one row per key); `partition_cols ⊆ group_keys` so a
-    group never straddles partitions.
-
-    Shares the staged, per-partition two-rename crash safety of
-    `merge_upsert_partitioned` (heals via recover_partition_swaps). NOTE:
-    the fold itself is NOT idempotent (re-folding the same batch
-    double-counts) — exactly-once replay must come from the streaming
-    checkpoint, which is precisely what `foreachBatch` + this function
-    provides.
-    """
-    missing = [c for c in partition_cols if c not in group_keys]
-    if missing:
-        raise ValueError(
-            f"partition_cols {missing} not in group_keys — a group would "
-            "straddle partitions and the fold would split it"
-        )
-
-    def combine(base, upd):
-        merged = upd if base is None else base.unionByName(upd)
-        return merged.groupBy(*group_keys).agg(
-            *[F.sum(c).alias(c) for c in sum_cols]
-        )
-
-    return _merge_partition_scoped(spark, target_path, partials, partition_cols, combine)
 
 
 def write_bucketed(

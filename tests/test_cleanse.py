@@ -85,14 +85,6 @@ def test_t1_parse_mentions_roundtrip(spark):
     assert {r.id: r.csv for r in back} == {"1": "a,b", "2": None, "3": None}
 
 
-def test_t2_explode_mentions_null_yields_zero_rows(spark):
-    df = cleanse.parse_mentions(
-        spark.createDataFrame([("1", "x,y"), ("2", None)], ["id", "mentionedUsers"])
-    )
-    out = cleanse.explode_mentions(df)
-    assert sorted((r.id, r.mentioned_user) for r in out.collect()) == [("1", "x"), ("1", "y")]
-
-
 def test_t3_dataload_label(spark):
     df = spark.createDataFrame([("2024-03-05 10:00:00",)], ["s"]).select(
         F.to_timestamp("s").alias("ts")

@@ -22,6 +22,8 @@ TWEETS = [
      "2023-03-25 10:00:00"),
     (3, "2023-03-25 10:02:00", "reply text", "bob", 7, None, 1, 1, "alice",
      "2023-03-25 10:00:00"),
+    (4, "2023-03-25 10:03:00", "more news", "erin", 3, "carol,,", 0, 0, None,
+     "2023-03-25 10:00:00"),
 ]
 TWEET_COLS = [
     "id", "date", "content", "username", "followersCount", "mentionedUsers",
@@ -35,20 +37,25 @@ def test_twitter_graph_golden(spark):
     got_edges = sorted((r.src, r.dst, r.rel_type) for r in edges.collect())
     # tweet 2 is scrubbed ([deleted]); tweet 1 fans out 2 MENTIONS; tweet 3 has
     # a reply edge — the reference's 4-way null dispatch collapses to this.
+    # Tweet 4's empty names ("carol,,") yield no user node and no edge.
     assert got_edges == [
         ("1", "alice", "POSTED_BY"),
         ("1", "bob", "MENTIONS"),
         ("1", "carol", "MENTIONS"),
         ("3", "alice", "IN_REPLY_TO"),
         ("3", "bob", "POSTED_BY"),
+        ("4", "carol", "MENTIONS"),
+        ("4", "erin", "POSTED_BY"),
     ]
     got_nodes = sorted((r.node_id, r.label) for r in nodes.collect())
     assert got_nodes == [
         ("1", "Tweet"),
         ("3", "Tweet"),
+        ("4", "Tweet"),
         ("alice", "User_Twitter"),
         ("bob", "User_Twitter"),
         ("carol", "User_Twitter"),
+        ("erin", "User_Twitter"),
     ]
 
 
@@ -241,4 +248,4 @@ def test_daily_commit_reads_each_source_file_once(spark, tmp_path):
         )
         assert _files_read_since(spark, first) == expected
     got = writers.read_manifested(spark, edges_t)
-    assert got.filter("rel_type = 'POSTED_BY'").count() == 4  # 4 of 6 tweets kept
+    assert got.filter("rel_type = 'POSTED_BY'").count() == 6  # 6 of 8 tweets kept

@@ -304,52 +304,6 @@ def test_merge_upsert_partitioned_crash_recovery(spark, tmp_path):
     assert {r.id: r.v for r in merged.collect()} == {"a": 1, "b": 9}
 
 
-def test_merge_aggregate_partitioned_folds_partials(spark, tmp_path):
-    """Continuous-aggregate refresh: partial sums fold additively into the
-    stored rollup; only touched partitions rewrite."""
-    target = str(tmp_path / "rollup")
-    day1 = spark.createDataFrame(
-        [("2024-01-01", "click", 10, 3), ("2024-01-01", "view", 5, 2)],
-        ["day", "event_type", "total", "n"],
-    )
-    writers.merge_aggregate_partitioned(
-        spark, target, day1, ["day", "event_type"], ["total", "n"], ["day"]
-    )
-    before = {k: v for k, v in _file_state(tmp_path / "rollup").items() if "day=2024-01-01" in k}
-    # a later batch touches day 2 AND adds more day-1 clicks
-    batch2 = spark.createDataFrame(
-        [("2024-01-02", "click", 7, 1), ("2024-01-01", "click", 4, 2)],
-        ["day", "event_type", "total", "n"],
-    )
-    out = writers.merge_aggregate_partitioned(
-        spark, target, batch2, ["day", "event_type"], ["total", "n"], ["day"]
-    )
-    # partition values round-trip type-inferred (string day -> date)
-    got = {(str(r.day), r.event_type): (r.total, r.n) for r in out.collect()}
-    assert got == {
-        ("2024-01-01", "click"): (14, 5),
-        ("2024-01-01", "view"): (5, 2),
-        ("2024-01-02", "click"): (7, 1),
-    }
-    # day-1 partition WAS touched this time; now fold one touching only day 2
-    before2 = {k: v for k, v in _file_state(tmp_path / "rollup").items() if "day=2024-01-01" in k}
-    writers.merge_aggregate_partitioned(
-        spark,
-        target,
-        spark.createDataFrame([("2024-01-02", "view", 1, 1)], ["day", "event_type", "total", "n"]),
-        ["day", "event_type"],
-        ["total", "n"],
-        ["day"],
-    )
-    after2 = {k: v for k, v in _file_state(tmp_path / "rollup").items() if "day=2024-01-01" in k}
-    assert after2 == before2  # untouched partition byte-identical
-    assert before  # sanity
-    with pytest.raises(ValueError, match="straddle"):
-        writers.merge_aggregate_partitioned(
-            spark, target, day1, ["event_type"], ["total"], ["day"]
-        )
-
-
 def test_dedupe_last_writer(spark):
     df = spark.createDataFrame(
         [("k", "2024-01-01", 1), ("k", "2024-01-02", 2)], ["id", "ts", "v"]
